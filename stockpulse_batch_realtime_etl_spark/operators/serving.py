@@ -19,7 +19,7 @@ to ``as_of = max(event_time)`` of the input — the deterministic NOW()
 stand-in, so results are reproducible and oracle-checkable at any scale
 factor.  (To replay a historical window, pre-filter the input to
 ``event_time <= t`` — the max-based as-of then equals ``t``'s last tick;
-no separate as_of parameter exists.)  The as-of scalar is a SQL scalar
+no separate as_of parameter exists.)  The as-of scalar is a scalar
 subquery (see ``_window_filter``), never a ``.collect()`` round-trip, so
 the whole query stays one lazily-planned DAG that works unchanged on a
 cluster.
@@ -32,8 +32,8 @@ Scale notes:
   out in SURVEY.md §4); the follow-up J1 join disappears entirely.
 * summaries are single partial→final aggregates; with a symbol predicate
   they scan only matching row groups (predicate pushdown on the symbol
-  column; at 100 TB the ticks table would be partitioned/clustered by
-  symbol+date exactly like the reference's composite B-tree, init.sql:10-11).
+  column; the ticks table is partitioned by symbol+date like the
+  reference's composite B-tree, init.sql:10-11).
 """
 
 from __future__ import annotations
@@ -66,38 +66,17 @@ def _window_filter(df: DataFrame, time_col: str, minutes: int) -> DataFrame:
     reference's ``event_time >= NOW() - interval`` with no upper bound),
     where as_of = max(time_col) — the deterministic stand-in for NOW() (F9).
 
-    Expressed as a SQL *scalar subquery* over a one-off temp view.  The
-    subquery executes once cluster-side and its result becomes a real
-    filter predicate on the main scan — one codegen'd stage.  The DataFrame
-    alternative (1-row aggregate + broadcast join) plans as
-    BroadcastNestedLoopJoin across three extra AQE stages and measured
-    4-6× slower at sf0.1; a window-function ``max() OVER ()`` would force
-    all rows through a single partition.  The view is session-scoped
-    metadata (no data is materialized or collected).
+    ``DataFrame.scalar()`` makes as_of a scalar subquery: it executes once
+    and its result becomes a real filter predicate on the main scan, with
+    no catalog entry and no ``.collect()``.  The DataFrame alternative
+    (1-row aggregate + broadcast join) plans as BroadcastNestedLoopJoin
+    across three extra AQE stages; a window-function ``max() OVER ()``
+    would force all rows through a single partition.
     """
-    import uuid
-
-    name = "wf_" + uuid.uuid4().hex[:12]
-    df.createOrReplaceTempView(name)
-    out = df.sparkSession.sql(
-        f"""
-        SELECT * FROM {name}
-        WHERE {time_col} >= (SELECT max({time_col}) FROM {name})
-                            - INTERVAL {int(minutes)} MINUTES
-        """
+    as_of = df.select(F.max(time_col)).scalar()
+    return df.filter(
+        F.col(time_col) >= as_of - F.expr(f"INTERVAL {int(minutes)} MINUTES")
     )
-    # Classic PySpark analyzes spark.sql eagerly, so the view could be
-    # dropped here — but Spark CONNECT resolves the relation lazily at
-    # action time, and an immediate drop would land this exact code on
-    # 'table or view not found' on a connect cluster.  Dropping after
-    # capturing the analyzed plan keeps both modes safe; uuid names never
-    # collide, and the serving layer reuses one view name per call so the
-    # catalog stays bounded at the call concurrency, not call count.
-    try:
-        out.schema  # force analysis in both classic and connect modes
-    finally:
-        df.sparkSession.catalog.dropTempView(name)
-    return out
 
 
 # --- /symbols ---------------------------------------------------------------

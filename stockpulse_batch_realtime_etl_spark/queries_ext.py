@@ -759,8 +759,7 @@ def q_label_centroid_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # The vectorized scale path (similarity.brute_force_topk_np) was a
 # registered query through r9; it is bit-identical to ann_brute_force_topk
-# (same oracle, same rows) so the registration was retired in r10 to keep
-# the registry at 150 = a perfect 3-round gate rotation (r9 verdict #5).
+# (same oracle, same rows) so the duplicate registration was retired.
 # The equivalence is still pinned as a test (tests/test_similarity.py) and
 # the function remains the ANN-ladder recall-truth engine.
 

@@ -1708,173 +1708,3 @@ def q_storage_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Extension registrations (dedup / similarity / text) live in queries_ext,
 # which calls register() at import time.
 from stockpulse_batch_realtime_etl_spark import queries_ext  # noqa: E402,F401
-
-
-# --- correctness-gate ordering ----------------------------------------------
-# The driver's correctness harness checks the FIRST 50 entries of queries()
-# in dict order (r1 evidence: exactly the last 10 registrations got no
-# CORRECTNESS row).  Order the registry so the highest-information queries —
-# ones never yet verified by the gate, or whose code changed this round —
-# come first, and queries already proven green in a prior round fill the
-# tail.  Names not listed keep their registration order after the priority
-# block, so newly-added queries are never silently dropped from the dict.
-#: EXACTLY the 50 names inside the driver's correctness window this round —
-#: length asserted at import time (the r4 boundary slip put 60 names ahead
-#: of a "50-entry" comment and silently dropped 10 intended rotations).
-#:
-#: ROUND-17 ROTATION (same scheduled 3-round round-robin as r15/r16):
-#: the 50 r14-gated names — after r16 they are exactly 2 rounds stale,
-#: the rotation maximum, so they take the whole r17 window in their
-#: queued _GATE_NEXT order.  After this round the histogram is r17=50,
-#: r16=50, r15=50 and gate_audit's strict ≤2-rounds-stale invariant
-#: holds.  This window regates the r14-era names on driver hardware —
-#: including most of the queries this optimization round touches
-#: (semantic_dedup, semdedup_recall_report, ann_ivfpq_topk,
-#: dedup_survivors, dup_groups_star, jaccard_top_pairs,
-#: streaming_interval_join, streaming_sector_rollup,
-#: streaming_session_bars, orders_profile), which is exactly the
-#: highest-information placement.
-#:
-#: STANDING RULE — paired retire-on-register: the registry holds
-#: EXACTLY 150 names so the 3-round / 50-per-round rotation has zero
-#: slack.  Registering a 151st query would make some name >2 rounds
-#: stale and break the gate_audit invariant.  New capability therefore
-#: folds into an EXISTING query's corpus (the r13 pattern: GIF/TIFF/
-#: MS-ADPCM joined the multimodal/audio round-robins) — or, if a new
-#: registration is truly needed, an old name must be retired in the
-#: same commit so the count stays at 150.
-_GATE_HEAD: tuple[str, ...] = (
-    "multimodal_jpeg422_stats",
-    "streaming_interval_join",
-    "semantic_dedup",
-    "semdedup_recall_report",
-    "ann_ivfpq_topk",
-    "ann_pq_adc_topk",
-    "bm25_scores",
-    "curation_funnel",
-    "dataset_splits",
-    "dedup_survivors",
-    "dup_groups_star",
-    "ema_ticks",
-    "frame_samples",
-    "gapfill_bars",
-    "health_counts",
-    "hourly_bars_rollup",
-    "hourly_symbol_pivot",
-    "incremental_dedup",
-    "jaccard_top_pairs",
-    "latest_bars",
-    "minhash_signatures",
-    "mixture_sample",
-    "multimodal_features",
-    "multimodal_png_stats",
-    "ngram_novelty",
-    "notable_days",
-    "orders_profile",
-    "packing_stats",
-    "pii_redact",
-    "pii_scan",
-    "price_cardinality",
-    "price_histogram",
-    "q10_returned_items",
-    "q14_promo_revenue",
-    "quality_length_filter",
-    "quality_score",
-    "rolling_stats",
-    "session_bars",
-    "simulated_ticks",
-    "sliding_bars",
-    "source_token_stats",
-    "storage_roundtrip",
-    "stratified_sample",
-    "streaming_running_bars",
-    "streaming_sector_rollup",
-    "streaming_session_bars",
-    "time_range_stats",
-    "top_bars_per_day",
-    "version_info",
-    "vwap_bars",
-)
-
-#: Names queued BEHIND the window, in r18 rotation priority: the 50
-#: r15-gated names in their r15 window order (the CORRECTNESS_r15.json
-#: key order) — after r17 they are exactly 2 rounds stale, the rotation
-#: maximum, so they take the whole r18 window.  The 50 r16-gated names
-#: follow in registration order as the un-listed tail (1 round stale
-#: after r17, windowed again in r19).  Every name not listed follows in
-#: registration order.  All registered queries are still verified every
-#: round by the local all-queries parity suite
-#: (tests/test_oracle_parity) and tools/check_parity.py.
-_GATE_NEXT: tuple[str, ...] = (
-    "symbols",
-    "latest_ticks",
-    "latest_tick_per_symbol",
-    "bollinger_bands",
-    "rsi_ticks",
-    "donchian_breakouts",
-    "obv_ticks",
-    "max_drawdown",
-    "ticks_asof_bars",
-    "ticks_asof_next_bar",
-    "q13_order_counts",
-    "q18_large_orders",
-    "q19_disjunctive_revenue",
-    "q7_nation_volume",
-    "q22_sales_opportunity",
-    "revenue_cube",
-    "price_deciles",
-    "symbol_correlations",
-    "symbol_beta",
-    "event_transitions",
-    "rfm_segments",
-    "weekday_hour_profile",
-    "stats_summary",
-    "kafka_roundtrip_ticks",
-    "hapax_stats",
-    "lsh_candidate_pairs",
-    "minhash_jaccard_estimate",
-    "simhash_near_dups",
-    "label_centroid_similarity",
-    "json_decode_ticks",
-    "dlq_failed_events",
-    "bigram_counts",
-    "streaming_dedup_ticks",
-    "multimodal_jpeg_stats",
-    "multimodal_jpeg411_stats",
-    "multimodal_jpeg_progressive_stats",
-    "rolling_fingerprints",
-    "fingerprint_match_pairs",
-    "contamination_overlap",
-    "bigram_lm_scores",
-    "repetition_stats",
-    "streaming_pair_join",
-    "events_profile",
-    "missing_minutes",
-    "funnel_counts",
-    "cohort_retention",
-    "kmeans_cell_report",
-    "return_outliers",
-    "video_frame_stats",
-    "audio_decimated_stats",
-)
-assert len(_GATE_HEAD) == 50, (
-    f"driver gate window is exactly 50 entries; _GATE_HEAD has "
-    f"{len(_GATE_HEAD)} — a miscounted rotation must fail loudly"
-)
-assert not set(_GATE_HEAD) & set(_GATE_NEXT)
-
-_GATE_PRIORITY: tuple[str, ...] = _GATE_HEAD + _GATE_NEXT
-
-
-def _gate_ordered(d: dict) -> dict:
-    head = {k: d[k] for k in _GATE_PRIORITY if k in d}
-    return head | {k: v for k, v in d.items() if k not in head}
-
-
-QUERIES = _gate_ordered(QUERIES)
-ORACLES = _gate_ordered(ORACLES)
-
-# every gate-priority name must actually exist in the registry — a typo'd
-# rotation entry would otherwise silently shrink the driver window
-_missing = [n for n in _GATE_PRIORITY if n not in QUERIES]
-assert not _missing, f"_GATE_PRIORITY names not in registry: {_missing}"

@@ -1,4 +1,4 @@
-"""SparkSession factory with scale-appropriate defaults.
+"""SparkSession factory with host-fitted defaults.
 
 The reference (SURVEY.md §4) delegates all planning to Postgres; here the
 equivalent "physical design" is a handful of deliberate Spark confs:
@@ -6,15 +6,14 @@ equivalent "physical design" is a handful of deliberate Spark confs:
 * ``spark.sql.session.timeZone=UTC`` — TIMESTAMPTZ parity with the reference
   (producer.py:73 emits UTC ISO-8601; Postgres stores timestamptz).
 * AQE on (+ coalescePartitions + skewJoin) — runtime re-planning replaces any
-  hand-tuned DOP; at 100 TB the skew-join split is what keeps a hot symbol /
-  hot join key from stalling a stage.
-* ``spark.sql.shuffle.partitions`` — sized to the local test harness via
-  ``SPARK_GRAFT_CPUS`` (default 32).  On a real cluster this would be
-  ~2-3× total cores (or left to AQE's initialPartitionNum); the point is that
-  every operator in this package works per-partition and never assumes a
-  specific partition count.
-* Arrow enabled — all pandas interchange (mapInPandas / applyInPandas in the
-  multimodal + similarity extensions) is Arrow-batched, never row-at-a-time.
+  hand-tuned DOP; the skew-join split keeps a hot symbol from stalling a
+  stage.
+* ``local[N]`` and ``spark.sql.shuffle.partitions`` — N is
+  ``SPARK_GRAFT_CPUS``, else the CPUs this process may run on.  Every
+  operator works per-partition and never assumes a partition count.
+* ``spark.driver.memory`` — ``SPARK_GRAFT_DRIVER_MEM``, else half of the
+  host's physical RAM (local mode runs every task inside the driver JVM).
+* Arrow enabled — pandas interchange is Arrow-batched, never row-at-a-time.
 """
 
 from __future__ import annotations
@@ -31,19 +30,30 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) the singleton SparkSession with engine defaults."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    builder = SparkSession.builder.appName(app_name)
+    conf = default_conf(master, shuffle_partitions) | (extra_conf or {})
+    for k, v in conf.items():
+        builder = builder.config(k, v)
+    return builder.getOrCreate()
+
+
+def default_conf(
+    master: str | None = None, shuffle_partitions: int | None = None
+) -> dict[str, str]:
+    """The engine's Spark conf, sized to this host unless env overrides it."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = int(cpus) if cpus.isdigit() else 32
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
 
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+    return {
+        "spark.master": master,
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
         # AQE's coalescing floor is BYTE-based (default 1m), which is
         # miscalibrated for compute-dense, byte-light exchanges: ~1 MB of
         # compressed shuffle columns feeding a per-symbol window or a
@@ -54,31 +64,27 @@ def get_spark(
         # partitions are genuinely data-sized (any production exchange) —
         # measured r16: the rolling/window family −35%, no query slower.
         # Env-parameterized for cluster tuning, like the partition count.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "64k"),
-        )
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.filterPushdown", "true")
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize": os.environ.get(
+            "SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "64k"
+        ),
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.parquet.filterPushdown": "true",
         # The driver's events.parquet carries TIMESTAMP(NANOS) which Spark
         # rejects by default; read as long nanos and convert explicitly
         # (sources/tables.py) — truncation to µs matches DuckDB's read.
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
         # Streaming state: RocksDB scales state size past executor heap at
         # production cardinalities; harmless locally.
-        .config(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        )
-        .config("spark.sql.shuffle.spill.compress", "true")
-        .config("spark.ui.enabled", "false")
-        # local[N] runs every "executor" inside the driver JVM: 32 tasks
-        # sharing the heap.  8g forced GC storms once a long bench session
-        # accumulated state (queries benched 2-4x their isolated time); the
-        # host has 128 GiB, so give the single JVM a real executor's share.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
-    )
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
-    return builder.getOrCreate()
+        "spark.sql.streaming.stateStore.providerClass": (
+            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+        ),
+        "spark.sql.shuffle.spill.compress": "true",
+        "spark.ui.enabled": "false",
+        # local[N] runs every "executor" inside the driver JVM, so the one
+        # heap serves all N tasks; half the RAM leaves the rest to Python
+        # workers and the page cache.
+        "spark.driver.memory": os.environ.get(
+            "SPARK_GRAFT_DRIVER_MEM", f"{ram_mb // 2}m"
+        ),
+    }

@@ -100,8 +100,8 @@ def literal_df(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame
     ``spark.createDataFrame(list)`` always routes local data through
     ``sc.parallelize`` with defaultParallelism slices, so EVERY downstream
     action evaluates ~core-count pickled Python-worker tasks for a handful
-    of rows — measured at 45 executor-seconds (1.4 s/task × 32) for the
-    3-row method table inside ``ann_recall_report``.  Building the same
+    of rows — measured at 45 executor-seconds (1.4 s/task × 32) for a
+    3-row table.  Building the same
     rows as a literal array-of-structs inlined over ``range(1)`` stays
     entirely in the JVM: one task, no Python workers, no shuffle.
 

@@ -245,12 +245,9 @@ def _fixture_fingerprint(
     """The repo's ONE fixture-identity fingerprint: canonical path + per
     source parquet (mtime_ns, size) — so a REGENERATED fixture at the
     same path invalidates any cache keyed on it instead of silently
-    reusing stale files, and path spellings canonicalize.
-    tools/scale_probe.py keys its replica cache on this too (with its own
-    _PROBE_GEN version axis), so a future fingerprint upgrade (content
-    hashing, symlink handling) applies everywhere — deliberately WITHOUT
-    _CORPUS_VERSION, which versions the streaming corpus BUILDER, not
-    fixture identity."""
+    reusing stale files, and path spellings canonicalize.  Deliberately
+    WITHOUT _CORPUS_VERSION, which versions the streaming corpus BUILDER,
+    not fixture identity."""
     real = os.path.realpath(sf_dir)
     parts = [real]
     for name in tables:

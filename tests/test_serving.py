@@ -115,3 +115,33 @@ def test_latest_tick_per_symbol(ticks):
     assert out["AAPL"].event_time == ts(9, 5)
     assert out["MSFT"].price == 411.0
     assert out["GOOG"].event_time == ts(9, 30)
+
+
+def test_concurrent_summaries_match_serial_and_leave_catalog_alone(ticks):
+    """perfbench ``serve``'s access pattern: several threads issue windowed
+    endpoint calls on one session at once.  Every result equals its serial
+    twin, and no call leaves anything behind in the catalog."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    spark = ticks.sparkSession
+    bars = ohlcv_bars(ticks)
+    calls = [
+        (serving.bar_summary, bars, sym, minutes)
+        for sym in ("AAPL", "MSFT", "GOOG")
+        for minutes in (3, 1440)
+    ] + [
+        (serving.tick_summary, ticks, sym, minutes)
+        for sym in ("AAPL", "MSFT", "GOOG")
+        for minutes in (3, 1440)
+    ] + [(serving.movers, bars, minutes, 20) for minutes in (3, 1440)]
+
+    def run(call):
+        fn, df, *args = call
+        return sorted(fn(df, *args).collect())
+
+    serial = [run(c) for c in calls]
+    before = {t.name for t in spark.catalog.listTables()}
+    with ThreadPoolExecutor(max_workers=4) as pool:
+        concurrent = list(pool.map(run, calls * 2))
+    assert concurrent == serial * 2
+    assert {t.name for t in spark.catalog.listTables()} == before

@@ -6,7 +6,7 @@ are not UnsafeRow-mutable) — invisible at gate sf, a per-partition sort
 of the corpus stream in production.  tests/test_plans.py pins the named
 hot shapes; this tool is the mechanical catch-all for the NEXT demotion
 variant (a future collect_set, a decimal-typed buffer, a new query):
-it builds all ~150 registered DataFrames, extracts the formatted
+it builds every registered DataFrame, extracts the formatted
 physical plan of each, and fails loudly on
 
   * any CartesianProduct (never acceptable),
@@ -18,7 +18,9 @@ physical plan of each, and fails loudly on
     KEEPS allowlists below — each keep carries the reason the shape is
     intended (string min/max has no mutable buffer; a BNLJ over a
     bounded broadcast side is a cross-score, not a cross-join) and a
-    node-count ceiling so a keep cannot silently grow new ones.
+    node-count ceiling so a keep cannot silently grow new ones,
+  * any allowlist entry naming a query that is not registered (a keep
+    must not outlive its query).
 
 Run: python tools/plan_sweep.py [sf_dir]        (default sf0.001 — plan
 SHAPE is sf-independent; use check_parity/bench for values and timing).
@@ -36,8 +38,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 #: query -> (max SortAggregate nodes, why the sorted buffer is
-#: unavoidable).  Every entry is a DOCUMENTED-BOUNDED keep (the six
-#: from the r12 audit, SCALE.md "KEPT, with reason"): the sorted stream
+#: unavoidable).  Every entry is a DOCUMENTED-BOUNDED keep: the sorted stream
 #: is vocab/group-scale, or exact string min/max has no
 #: UnsafeRow-mutable buffer form.  Grow this list only with a reason.
 SORT_AGG_KEEPS: dict[str, tuple[int, str]] = {
@@ -121,7 +122,13 @@ def main() -> int:
 
     spark = get_spark()
     queries = entry_mod.queries()
-    bad: list[str] = []
+    bad: list[str] = [
+        f"{kind} allowlist names unregistered query {name!r}"
+        for kind, keeps in (("SortAggregate", SORT_AGG_KEEPS),
+                            ("BroadcastNestedLoopJoin", BNLJ_KEEPS))
+        for name in keeps
+        if name not in queries
+    ]
     print(f"sweeping {len(queries)} query plans at {sf_dir}")
     for name, fn in queries.items():
         try:
