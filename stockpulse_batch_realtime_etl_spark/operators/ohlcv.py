@@ -156,16 +156,19 @@ def sliding_bars(
     )
 
 
-def session_bars(ticks: DataFrame, gap_minutes: int = 5) -> DataFrame:
+def session_bars(ticks: DataFrame, gap: int | str = 5) -> DataFrame:
     """Session-window OHLCV: per-symbol activity bursts separated by ≥ gap
     of silence (the third window class; absent from the reference).
+    ``gap`` is whole minutes or a Spark interval string (``"90 seconds"``).
 
     ``F.session_window`` is a keyed sort + running merge under the hood —
     one shuffle on symbol.  The oracle replays it with the classic
     gaps-and-islands SQL (lag + cumulative sum of gap-breaks), proving the
     semantics match the relational definition exactly.
     """
-    w = F.session_window("event_time", f"{gap_minutes} minutes")
+    w = F.session_window(
+        "event_time", gap if isinstance(gap, str) else f"{gap} minutes"
+    )
     return (
         ticks.groupBy(F.col("symbol"), w.alias("w"))
         .agg(*bar_agg_exprs())

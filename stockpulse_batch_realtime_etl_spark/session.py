@@ -25,31 +25,26 @@ from pyspark.sql import SparkSession
 
 def get_spark(
     app_name: str = "stockpulse-spark",
-    master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) the singleton SparkSession with engine defaults."""
     builder = SparkSession.builder.appName(app_name)
-    conf = default_conf(master, shuffle_partitions) | (extra_conf or {})
+    conf = default_conf(shuffle_partitions) | (extra_conf or {})
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
 
 
-def default_conf(
-    master: str | None = None, shuffle_partitions: int | None = None
-) -> dict[str, str]:
+def default_conf(shuffle_partitions: int | None = None) -> dict[str, str]:
     """The engine's Spark conf, sized to this host unless env overrides it."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
-    if master is None:
-        master = f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = int(cpus) if cpus.isdigit() else 32
     ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
 
     return {
-        "spark.master": master,
+        "spark.master": f"local[{cpus}]",
         "spark.sql.session.timeZone": "UTC",
         "spark.sql.shuffle.partitions": str(shuffle_partitions),
         "spark.sql.adaptive.enabled": "true",
@@ -63,10 +58,7 @@ def default_conf(
         # floor keeps such stages parallel while remaining inert wherever
         # partitions are genuinely data-sized (any production exchange) —
         # measured r16: the rolling/window family −35%, no query slower.
-        # Env-parameterized for cluster tuning, like the partition count.
-        "spark.sql.adaptive.coalescePartitions.minPartitionSize": os.environ.get(
-            "SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "64k"
-        ),
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64k",
         "spark.sql.adaptive.skewJoin.enabled": "true",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.sql.parquet.filterPushdown": "true",
@@ -74,10 +66,12 @@ def default_conf(
         # rejects by default; read as long nanos and convert explicitly
         # (sources/tables.py) — truncation to µs matches DuckDB's read.
         "spark.sql.legacy.parquet.nanosAsLong": "true",
-        # Streaming state: RocksDB scales state size past executor heap at
-        # production cardinalities; harmless locally.
+        # Streaming state: every stateful operator here is bounded by a
+        # watermark (or by the bounded corpus), so the in-memory, checkpointed
+        # provider holds it; RocksDB only pays off once state outgrows the heap.
         "spark.sql.streaming.stateStore.providerClass": (
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+            "org.apache.spark.sql.execution.streaming.state."
+            "HDFSBackedStateStoreProvider"
         ),
         "spark.sql.shuffle.spill.compress": "true",
         "spark.ui.enabled": "false",

@@ -28,6 +28,14 @@ scale a day partition of 1-minute bars is ~1440 × n_symbols rows — small,
 so the rewrite amplification is bounded and bulk backfills stay partition-
 parallel.  (With Delta/Iceberg available this collapses to ``MERGE INTO``;
 the surrounding plumbing is unchanged.)
+
+Bounded runs: every ``run_*`` function below is one stream definition
+handed to :func:`_run_bounded`, which wipes its directories, builds the
+corpus, runs it once with ``availableNow`` into a ``foreachBatch`` writer
+and restores the session conf.  All streaming state — windows, dedup keys,
+join buffers, the custom running bar — is watermark- or corpus-bounded, so
+it lives in the one state-store provider ``session.default_conf`` sets:
+the in-memory, checkpointed HDFS-backed store.
 """
 
 from __future__ import annotations
@@ -35,12 +43,16 @@ from __future__ import annotations
 import contextlib
 import os
 import time
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
-from stockpulse_batch_realtime_etl_spark.operators.ohlcv import bar_agg_exprs
+from stockpulse_batch_realtime_etl_spark.operators.ohlcv import (
+    bar_agg_exprs,
+    session_bars,
+)
 from stockpulse_batch_realtime_etl_spark.sources.dlq import split_raw_stream
 
 BARS_KEY = ("symbol", "bucket_start")
@@ -186,11 +198,55 @@ def start_bar_aggregation(
             lambda df, _epoch: upsert_bars_batch(df, table_path, audit_path)
         )
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_secs} seconds")
-    return writer.start()
+    return _start(ticks.sparkSession, writer, available_now, trigger_secs)
+
+
+_NO_DATA_BATCHES = "spark.sql.streaming.noDataMicroBatches.enabled"
+
+
+@contextlib.contextmanager
+def _session_confs(spark: SparkSession, confs: dict[str, str]):
+    """Set ``confs`` on the session for the block, then restore them, even
+    on error."""
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def _start(
+    spark: SparkSession,
+    writer: DataStreamWriter,
+    available_now: bool,
+    trigger_secs: int | None = None,
+    flush: bool = False,
+) -> StreamingQuery:
+    """Start ``writer`` bounded (``availableNow``: every input present at
+    start, then stop) or continuous: every ``trigger_secs`` if given, else
+    back to back.
+
+    A bounded query skips the trailing no-data batch unless ``flush``.  That
+    batch only advances the watermark to flush withheld output (outer-join
+    null rows) and GC state; every other query here emits each row in the
+    batch that receives it (update-mode upserts, appends, complete-mode
+    rewrites), and the extra batch costs a full plan+commit cycle (1.3 s on
+    the pair join; 0.6 s of a 3.5 s bars backfill of 120k ticks, 4 cores).
+    The query reads the setting when it starts, so the session's own value
+    is back once it has.
+    """
+    if not available_now:
+        if trigger_secs:
+            writer = writer.trigger(processingTime=f"{trigger_secs} seconds")
+        return writer.start()
+    with _session_confs(spark, {_NO_DATA_BATCHES: str(flush).lower()}):
+        return writer.trigger(availableNow=True).start()
 
 
 #: Bump when RAW_JSON_SQL / corpus derivation changes — it keys the on-disk
@@ -413,87 +469,80 @@ def _pin_daily_mtimes(dest: str) -> None:
     )
 
 
-@contextlib.contextmanager
-def _bounded_run_env(
+# State partitions of a bounded run: fixed at its first batch from the
+# session's shuffle.partitions, so a bare session would run 200 state-store
+# tasks per stateful batch over a corpus that fills a handful.
+_STATE_PARTITIONS = "8"
+
+
+def _run_bounded(
     spark: SparkSession,
     sf_dir: str,
     base_dir: str | None,
     kind: str,
-    with_redelivery: bool = False,
-    keep_rocksdb: bool = False,
-    skip_no_data_batch: bool = False,
-):
-    """Shared setup for a bounded (availableNow) streaming run over the
-    JSON corpus: materialize (or reuse) the corpus as text files, size
-    streaming state to the bounded corpus, and restore session conf after.
+    query: Callable[[DataFrame], DataFrame],
+    mode: str = "append",
+    write: Callable[[DataFrame, str], None] | None = None,
+    redelivery: bool = False,
+    days_per_batch: int | None = None,
+    flush: bool = False,
+) -> tuple[str, StreamingQuery]:
+    """Run ``query`` once, bounded (availableNow), over the Kafka-shaped
+    JSON corpus of ``sf_dir``; return ``(out_dir, finished query)``.
 
-    State sizing: bounded backfill with bounded state → the memory-backed
-    store beats RocksDB, whose per-batch per-partition instance open/commit
-    overhead only pays off when state outgrows the executor heap; and state
-    partition count (fixed at the stream's FIRST batch from
-    spark.sql.shuffle.partitions) is sized to the corpus rather than the
-    cluster-wide default.  The session defaults (RocksDB, 32 partitions)
-    still govern continuous production streams.
+    * Directories: ``out`` and ``ckpt`` under ``base_dir`` (default: a temp
+      dir keyed on ``kind`` and ``sf_dir``) are wiped first, so every run
+      starts from empty state and replays idempotently.
+    * Corpus: ``query`` maps the raw ``value`` stream to the output stream.
+      The corpus is built once and cached (:func:`_ensure_corpus`), with the
+      redelivered slice when ``redelivery``.  With ``days_per_batch`` it is
+      the day-partitioned corpus (:func:`_ensure_daily_corpus`), replayed
+      that many days per micro-batch so the watermark advances mid-run.
+    * Trailing no-data batch: off unless ``flush`` (see :func:`_start`).
+    * State partitions: 8, whatever the session's shuffle.partitions, so
+      bounded state is not spread over a cluster-sized task count.  The
+      session's own value is restored afterwards, even on error.
+    * Sink: ``foreachBatch`` calling ``write(batch, out_dir)``.  By default
+      complete mode overwrites ``out_dir`` with parquet, and append and
+      update modes append to it.
 
-    Yields ``(raw_path, out_dir, checkpoint_dir)``; out/checkpoint are
-    wiped per run (idempotence), the corpus is cached (_ensure_corpus).
+    The query is named ``kind``; its state lives in the session's one
+    state-store provider (``session.default_conf``).
     """
     import hashlib
     import shutil
     import tempfile
 
-    overrides = {
-        "spark.sql.streaming.stateStore.providerClass": (
-            "org.apache.spark.sql.execution.streaming.state."
-            "HDFSBackedStateStoreProvider"
-        ),
-        "spark.sql.shuffle.partitions": "8",
-    }
-    if skip_no_data_batch:
-        # The trailing no-data micro-batch only advances the watermark to
-        # flush withheld output (outer-join null rows, append-mode window
-        # finals) and GC state.  Runs whose every output row is emitted in
-        # the batch that receives it — inner joins, dropDuplicates,
-        # update-mode upserts, complete-mode rewrites — produce an
-        # identical result without it, and the batch costs a full
-        # plan+commit cycle (measured 1.3 s on the pair join).  Callers
-        # that DO rely on the final flush (outer pair joins) keep the
-        # default.
-        overrides["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
-    if keep_rocksdb:
-        # transformWithState is only supported on the RocksDB provider —
-        # set it EXPLICITLY (not merely "don't override"): an externally
-        # built session (the bare-harness case _ensure_session_confs
-        # supports) defaults to the HDFS-backed provider, which would fail
-        overrides["spark.sql.streaming.stateStore.providerClass"] = (
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider"
-        )
-    prev = {k: spark.conf.get(k, None) for k in overrides}
-    for k, v in overrides.items():
-        spark.conf.set(k, v)
-
     if base_dir is None:
         tag = hashlib.md5(f"{kind}:{sf_dir}".encode()).hexdigest()[:8]
-        base_dir = os.path.join(
-            tempfile.gettempdir(), f"stockpulse_{kind}_{tag}"
-        )
+        base_dir = os.path.join(tempfile.gettempdir(), f"stockpulse_{kind}_{tag}")
     out_dir = os.path.join(base_dir, "out")
     ckpt = os.path.join(base_dir, "ckpt")
-    # wipe exactly what the docstring promises — the out/ckpt subdirs —
-    # never the whole base_dir (a caller may hand us a directory that
-    # contains unrelated files)
+    # wipe only out/ckpt: a caller's base_dir may hold unrelated files
     shutil.rmtree(out_dir, ignore_errors=True)
     shutil.rmtree(ckpt, ignore_errors=True)
-    try:
-        raw_path = _ensure_corpus(spark, sf_dir, with_redelivery)
-        yield raw_path, out_dir, ckpt
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    if write is None:
+        save_mode = "overwrite" if mode == "complete" else "append"
+
+        def write(batch: DataFrame, path: str) -> None:
+            batch.write.mode(save_mode).parquet(path)
+
+    with _session_confs(spark, {"spark.sql.shuffle.partitions": _STATE_PARTITIONS}):
+        if days_per_batch:
+            corpus = _ensure_daily_corpus(spark, sf_dir)
+        else:
+            corpus = _ensure_corpus(spark, sf_dir, redelivery)
+        raw = raw_json_stream(spark, corpus, days_per_batch).select("value")
+        writer = (
+            query(raw)
+            .writeStream.queryName(kind)
+            .outputMode(mode)
+            .option("checkpointLocation", ckpt)
+            .foreachBatch(lambda batch, _epoch: write(batch, out_dir))
+        )
+        q = _start(spark, writer, available_now=True, flush=flush)
+        q.awaitTermination()
+    return out_dir, q
 
 
 def run_pipeline_available_now(
@@ -504,31 +553,22 @@ def run_pipeline_available_now(
     (producer wire format → consumer decode/DLQ → aggregator upsert) as one
     deterministic, oracle-checkable invocation.
 
-    Steps: materialize the Kafka-shaped JSON corpus (sources/ticks.py
-    RAW_JSON_SQL) as JSON-lines files, stream them with
-    ``trigger(availableNow=True)`` through the decode→split→windowed-agg→
-    upsert pipeline, then read the bars table back.  State, checkpoint and
-    sink live under ``base_dir`` (a deterministic temp dir, wiped per run
-    for idempotence).
+    The Kafka-shaped JSON corpus (sources/ticks.py RAW_JSON_SQL) streams
+    through decode → split → windowed agg → update-mode upsert
+    (:func:`upsert_bars_batch`), then the bars table is read back.  Every
+    refinement is upserted in the batch that produces it, so the run skips
+    the trailing no-data batch.
     """
-    with _bounded_run_env(
-        spark, sf_dir, base_dir, "stream", skip_no_data_batch=True
-    ) as dirs:  # update-mode upsert: every refinement emits in its batch
-        raw_dir, out_dir, ckpt = dirs
-        ticks, _failed = tick_stream_from_raw(raw_json_stream(spark, raw_dir))
-        q = start_bar_aggregation(ticks, out_dir, ckpt, available_now=True)
-        q.awaitTermination()
-        bars_dir = out_dir
-    return spark.read.parquet(bars_dir).select(
-        "symbol",
-        "bucket_start",
-        "open",
-        "high",
-        "low",
-        "close",
-        "volume_sum",
-        "tick_count",
+    out_dir, _ = _run_bounded(
+        spark,
+        sf_dir,
+        base_dir,
+        "stream",
+        lambda raw: windowed_bars(tick_stream_from_raw(raw)[0]),
+        mode="update",
+        write=upsert_bars_batch,
     )
+    return spark.read.parquet(out_dir).drop("bucket_date")
 
 
 def start_dlq_sink(
@@ -541,9 +581,7 @@ def start_dlq_sink(
         .format("parquet")
         .option("path", dlq_path)
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(failed.sparkSession, writer, available_now)
 
 
 def run_session_bars_available_now(
@@ -552,76 +590,41 @@ def run_session_bars_available_now(
     base_dir: str | None = None,
     gap: str = "5 minutes",
 ) -> DataFrame:
-    """Streaming SESSION-window bars (dynamic-gap flavor of ST5): merge
-    ticks separated by ≤ ``gap`` into one session per symbol, aggregated
-    with the shared OHLCV expression list — the sessionization every
-    activity-stream pipeline needs and fixed windows can't express.
+    """Streaming SESSION-window bars (dynamic-gap flavor of ST5):
+    :func:`operators.ohlcv.session_bars` over the watermarked tick stream —
+    ticks separated by ≤ ``gap`` (a Spark interval string) merge into one
+    session per symbol.
 
     Session windows forbid update mode, and append mode would withhold
     every session the final watermark hasn't closed (the last session per
-    symbol, for a bounded corpus) — so the bounded run uses COMPLETE mode
-    through ``foreachBatch``: each batch overwrites the sink with the full
-    session table, and the final batch's table is exactly the batch
-    ``session_bars`` semantics over the whole corpus (state is bounded by
-    the corpus here; a continuous production stream would run append mode
-    and accept watermark-delayed emission).
+    symbol, for a bounded corpus) — so the bounded run uses COMPLETE mode:
+    each batch overwrites the sink with the full session table, and the
+    final batch's table is exactly the batch ``session_bars`` semantics over
+    the whole corpus (state is bounded by the corpus here; a continuous
+    production stream would run append mode and accept watermark-delayed
+    emission).
     """
-    with _bounded_run_env(
-        spark, sf_dir, base_dir, "sess", skip_no_data_batch=True
-    ) as (  # complete mode: the final data batch already wrote the full table
-        raw_dir,
-        out_dir,
-        ckpt,
-    ):
-        ticks, _failed = tick_stream_from_raw(raw_json_stream(spark, raw_dir))
-        sess = (
-            ticks.withWatermark("event_time", "2 minutes")
-            .groupBy(
-                F.col("symbol"),
-                F.session_window("event_time", gap).alias("w"),
-            )
-            .agg(*bar_agg_exprs())
-            .select(
-                "symbol",
-                F.col("w.start").alias("session_start"),
-                "open",
-                "high",
-                "low",
-                "close",
-                "volume_sum",
-                "tick_count",
-            )
-        )
-
-        def _write_full(batch_df: DataFrame, _epoch: int) -> None:
-            batch_df.write.mode("overwrite").parquet(out_dir)
-
-        q = (
-            sess.writeStream.outputMode("complete")
-            .foreachBatch(_write_full)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    out_dir, _ = _run_bounded(
+        spark,
+        sf_dir,
+        base_dir,
+        "sess",
+        lambda raw: session_bars(
+            tick_stream_from_raw(raw)[0].withWatermark("event_time", "2 minutes"),
+            gap,
+        ),
+        mode="complete",
+    )
     return spark.read.parquet(out_dir)
 
 
 def run_running_bars_available_now(
-    spark: SparkSession,
-    sf_dir: str,
-    base_dir: str | None = None,
-    api: str = "apply_in_pandas_with_state",
+    spark: SparkSession, sf_dir: str, base_dir: str | None = None
 ) -> DataFrame:
     """Bounded run of a custom stateful operator: stream the wire corpus,
-    fold per-symbol running OHLCV state across micro-batches, and return
-    the FINAL running bar per symbol.
-
-    ``api`` selects the exemplar — ``"apply_in_pandas_with_state"``
-    (``streaming.stateful.running_bars``, the Spark 3.4+ GroupState form)
-    or ``"transform_with_state"`` (``running_bars_tws``, the Spark 4
-    StatefulProcessor form).  Both fold identically, so both are gated
-    against the SAME batch GROUP BY oracle.
+    fold per-symbol running OHLCV state across micro-batches
+    (``streaming.stateful.running_bars``, applyInPandasWithState), and
+    return the FINAL running bar per symbol.
 
     Update-mode emission yields one row per active symbol per batch; the
     final answer is the row with the highest tick_count per symbol
@@ -630,44 +633,23 @@ def run_running_bars_available_now(
     event_time, integer sums, min/max — so the result provably equals the
     batch GROUP BY over the same ticks, which is what the oracle checks.
     """
-    from stockpulse_batch_realtime_etl_spark.streaming import stateful
+    from stockpulse_batch_realtime_etl_spark.streaming.stateful import (
+        running_bars,
+    )
 
-    operators = {
-        "apply_in_pandas_with_state": stateful.running_bars,
-        "transform_with_state": stateful.running_bars_tws,
-    }
-    running_bars = operators[api]
-
-    with _bounded_run_env(
+    out_dir, _ = _run_bounded(
         spark,
         sf_dir,
         base_dir,
-        f"stateful_{api}",
-        keep_rocksdb=(api == "transform_with_state"),
-    ) as (
-        raw_dir,
-        out_dir,
-        ckpt,
-    ):
-        ticks, _failed = tick_stream_from_raw(raw_json_stream(spark, raw_dir))
-        bars = running_bars(
-            ticks.select("symbol", "price", "volume", "event_time")
-        )
-        def _append(batch_df: DataFrame, _epoch: int) -> None:
-            # parquet sinks reject update mode; foreachBatch append keeps
-            # every batch's emission for the final latest-per-symbol reduce
-            batch_df.write.mode("append").parquet(out_dir)
-
-        q = (
-            bars.writeStream.outputMode("update")
-            .foreachBatch(_append)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    emitted = spark.read.parquet(out_dir)
-    final = emitted.groupBy("symbol").agg(
+        "running_bars",
+        lambda raw: running_bars(
+            tick_stream_from_raw(raw)[0].select(
+                "symbol", "price", "volume", "event_time"
+            )
+        ),
+        mode="update",
+    )
+    final = spark.read.parquet(out_dir).groupBy("symbol").agg(
         F.max_by(
             F.struct(
                 "open", "high", "low", "close", "volume_sum", "tick_count"
@@ -696,32 +678,17 @@ def run_dedup_available_now(
     the watermark — at production rates, minutes of keys, not the stream's
     history.
     """
-    with _bounded_run_env(
+    out_dir, _ = _run_bounded(
         spark,
         sf_dir,
         base_dir,
         "dedup",
-        with_redelivery=True,
-        # dropDuplicates emits each first-seen row in its own batch; the
-        # trailing no-data batch only GCs state
-        skip_no_data_batch=True,
-    ) as (raw_dir, out_dir, ckpt):
-        # raw_dir is the {base,extra} glob: corpus + the redelivered slice
-        ticks, _failed = tick_stream_from_raw(raw_json_stream(spark, raw_dir))
-        deduped = (
-            ticks.select("symbol", "event_time")
-            .withWatermark("event_time", "2 minutes")
-            .dropDuplicates(["symbol", "event_time"])
-        )
-        q = (
-            deduped.writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .format("parquet")
-            .option("path", out_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        lambda raw: tick_stream_from_raw(raw)[0]
+        .select("symbol", "event_time")
+        .withWatermark("event_time", "2 minutes")
+        .dropDuplicates(["symbol", "event_time"]),
+        redelivery=True,
+    )
     return spark.read.parquet(out_dir)
 
 
@@ -729,121 +696,46 @@ def run_metrics_probe(
     spark: SparkSession, sf_dir: str, base_dir: str | None = None
 ) -> DataFrame:
     """Bounded streaming run with DETERMINISTIC micro-batching, returning
-    the listener-captured per-batch progress table — the substrate for
-    :func:`metrics.percentile_summary`'s oracle-gated summary.
+    its per-batch progress table (``metrics.PROGRESS_SCHEMA``, rows>0
+    batches only) — the substrate for :func:`metrics.percentile_summary`'s
+    oracle-gated summary.
 
-    Determinism: the corpus is written one text FILE PER EVENT DAY
-    (repartition("day") + partitionBy("day") → exactly one file per day),
-    and the stream reads it with ``maxFilesPerTrigger=1`` under
-    ``availableNow`` — so micro-batches ARE days, and the multiset of
-    per-batch ``num_input_rows`` equals the per-day corpus line counts,
-    which DuckDB replays from ``events`` with one GROUP BY.  Batch ORDER
-    (file discovery order) is not relied on — percentiles are
+    Determinism: the day-partitioned corpus holds exactly one text file per
+    event day and is replayed one file per micro-batch — so micro-batches
+    ARE days, and the multiset of per-batch ``num_input_rows`` equals the
+    per-day corpus line counts, which DuckDB replays from ``events`` with
+    one GROUP BY.  Batch ORDER is not relied on — percentiles are
     order-insensitive.
 
-    The probe pipeline is the raw text stream into a ``noop`` sink: batch
+    The probe pipeline is the raw text stream into a ``noop`` write: batch
     accounting (what the reference's Prometheus counters measure,
     main.py:47-67) does not depend on the transformation, and the cheapest
-    pipeline keeps the 30-batch bounded run fast at any sf.
+    pipeline keeps the 30-batch bounded run fast at any sf.  Progress comes
+    from the finished query's ``recentProgress``, which is synchronous.
     """
-    import shutil
-    import tempfile
-    import time as _time
-
     from stockpulse_batch_realtime_etl_spark.streaming import metrics
 
-    corpus_dir = _ensure_daily_corpus(spark, sf_dir)
-    tag = _corpus_tag(sf_dir, extra_key="metrics")
-    if base_dir is None:
-        base_dir = os.path.join(tempfile.gettempdir(), f"stockpulse_metrics_{tag}")
-    shutil.rmtree(base_dir, ignore_errors=True)
-    ckpt = os.path.join(base_dir, "ckpt")
-
-    n_days = len(
-        [d for d in os.listdir(corpus_dir) if d.startswith("day=")]
-    )
-    # size the listener ring to the batch count: the default 256 would
-    # silently evict the earliest day-batches at larger sf
-    listener = metrics.attach(spark, max_batches=max(256, 2 * n_days))
-    # the gated summary counts only rows>0 batches (and the oracle counts
-    # days), so the trailing zero-row no-data batch is pure overhead here
-    _ndb_key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    _ndb_prev = spark.conf.get(_ndb_key, None)
-    spark.conf.set(_ndb_key, "false")
-    try:
-        q = (
-            spark.readStream.format("text")
-            .option("maxFilesPerTrigger", 1)
-            .load(corpus_dir)
-            .select("value")
-            .writeStream.queryName("metrics_probe")
-            .format("noop")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        # listener events are delivered on the async listener bus — wait for
-        # all day-batches (bounded), then fall back to the query's own
-        # synchronous recentProgress for any stragglers (identical rows,
-        # keyed by batch_id)
-        deadline = _time.monotonic() + 30
-        def _probe_rows():
-            return [
-                r
-                for r in listener.snapshot()
-                if r["query_name"] == "metrics_probe"
-                and r["num_input_rows"] > 0
-            ]
-        while len(_probe_rows()) < n_days and _time.monotonic() < deadline:
-            _time.sleep(0.2)
-        rows = {r["batch_id"]: r for r in _probe_rows()}
-        if len(rows) < n_days:  # pragma: no cover - listener-bus straggler
-            import json as _json
-
-            for p in q.recentProgress:
-                p = _json.loads(p) if isinstance(p, str) else p
-                if p.get("numInputRows", 0) > 0:
-                    rows.setdefault(
-                        p["batchId"],
-                        {
-                            "query_name": "metrics_probe",
-                            "batch_id": p["batchId"],
-                            "num_input_rows": p["numInputRows"],
-                            "input_rows_per_second": float(
-                                p.get("inputRowsPerSecond") or 0.0
-                            ),
-                            "process_rows_per_second": float(
-                                p.get("processedRowsPerSecond") or 0.0
-                            ),
-                            "batch_duration_ms": p.get("batchDuration", 0),
-                            "state_rows": 0,
-                        },
-                    )
-    finally:
-        if _ndb_prev is None:
-            spark.conf.unset(_ndb_key)
-        else:
-            spark.conf.set(_ndb_key, _ndb_prev)
-        metrics.detach(spark, listener)
-    if len(rows) < n_days:
-        raise RuntimeError(
-            f"metrics probe captured {len(rows)}/{n_days} day-batches — "
-            "listener-bus + recentProgress retention both fell short; a "
-            "silently truncated progress table would skew the gated "
-            "percentile summary with nothing pointing at the cause"
-        )
-    from stockpulse_batch_realtime_etl_spark.sources.tables import literal_df
-
-    # literal_df, not createDataFrame: the ~30-row progress table would
-    # otherwise evaluate as core-count pickled Python-RDD tasks downstream
-    return literal_df(
+    _, q = _run_bounded(
         spark,
-        [
-            tuple(r[k.split(" ")[0]] for k in metrics.PROGRESS_SCHEMA.split(", "))
-            for r in rows.values()
-        ],
-        metrics.PROGRESS_SCHEMA,
+        sf_dir,
+        base_dir,
+        "metrics_probe",
+        lambda raw: raw,
+        write=lambda batch, _out: batch.write.format("noop")
+        .mode("append")
+        .save(),
+        days_per_batch=1,
+    )
+    progress = q.recentProgress
+    if not progress or progress[0]["batchId"] != 0:
+        raise RuntimeError(
+            f"metrics probe kept only the last {len(progress)} progress "
+            "updates (spark.sql.streaming.numRecentProgressUpdates); a "
+            "truncated progress table would skew the gated percentile summary"
+        )
+    return metrics.progress_df(
+        spark,
+        [metrics.progress_row(p) for p in progress if p["numInputRows"] > 0],
     )
 
 
@@ -890,23 +782,15 @@ def run_sector_rollup_available_now(
     across symbols, so ordered open/close would be tie-ambiguous across
     engines.
 
-    Bounded, oracle-checkable: complete-mode foreachBatch overwrite (the
-    session-bars pattern); the final table equals the batch join+GROUP BY
-    the oracle runs.
+    Bounded, oracle-checkable: complete mode (the session-bars pattern);
+    the final table equals the batch join+GROUP BY the oracle runs.
     """
-    # cache: Structured Streaming re-evaluates an uncached static plan
-    # (full corpus decode + distinct + broadcast rebuild) EVERY micro-batch
-    dim = symbol_sector_dim(spark, sf_dir).cache()
-    with _bounded_run_env(
-        spark, sf_dir, base_dir, "sector", skip_no_data_batch=True
-    ) as (  # complete mode: the final data batch already wrote the full table
-        raw_dir,
-        out_dir,
-        ckpt,
-    ):
-        ticks, _failed = tick_stream_from_raw(raw_json_stream(spark, raw_dir))
-        rollup = (
-            ticks.withWatermark("event_time", "2 minutes")
+    dim = symbol_sector_dim(spark, sf_dir)
+
+    def rollup(raw: DataFrame) -> DataFrame:
+        return (
+            tick_stream_from_raw(raw)[0]
+            .withWatermark("event_time", "2 minutes")
             .join(F.broadcast(dim), "symbol")
             .groupBy(
                 F.col("sector"),
@@ -932,22 +816,17 @@ def run_sector_rollup_available_now(
             )
         )
 
-        def _write_full(batch_df: DataFrame, _epoch: int) -> None:
-            batch_df.write.mode("overwrite").parquet(out_dir)
-
-        try:
-            q = (
-                rollup.writeStream.outputMode("complete")
-                .foreachBatch(_write_full)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            # unpersist even when the stream raises — the cached dim would
-            # otherwise pin executor memory for the life of the session
-            dim.unpersist()
+    # cache: Structured Streaming re-evaluates an uncached static plan
+    # (full corpus decode + distinct + broadcast rebuild) EVERY micro-batch.
+    # Cached inside the try, so no failure (corpus set-up included) can
+    # leave it pinning executor memory for the life of the session.
+    try:
+        dim.cache()
+        out_dir, _ = _run_bounded(
+            spark, sf_dir, base_dir, "sector", rollup, mode="complete"
+        )
+    finally:
+        dim.unpersist()
     return spark.read.parquet(out_dir)
 
 
@@ -999,21 +878,9 @@ def run_stream_stream_join_available_now(
         "right_outer": "ssjoin_ro",
         "full_outer": "ssjoin_fo",
     }
-    with _bounded_run_env(
-        spark,
-        sf_dir,
-        base_dir,
-        kinds[how],
-        # inner joins emit matches in-batch; the OUTER variants rely on
-        # the final no-data batch's watermark advance to flush their
-        # null-padded rows and MUST keep it
-        skip_no_data_batch=(how == "inner"),
-    ) as (
-        raw_dir,
-        out_dir,
-        ckpt,
-    ):
-        ticks, _failed = tick_stream_from_raw(raw_json_stream(spark, raw_dir))
+
+    def pairs(raw: DataFrame) -> DataFrame:
+        ticks = tick_stream_from_raw(raw)[0]
         # each stream may carry at most ONE event-time column into the
         # join: the window struct inherits the watermark, so the raw
         # timestamps ride along as plain epoch-µs longs and are re-cast
@@ -1038,7 +905,7 @@ def run_stream_stream_join_available_now(
         )
         # outer variants: an unmatched row's opposite-side window struct is
         # NULL, so bucket_start coalesces across the two (equal when matched)
-        joined = left.join(right, F.col("w") == F.col("w2"), how).select(
+        return left.join(right, F.col("w") == F.col("w2"), how).select(
             F.coalesce(F.col("w.start"), F.col("w2.start")).alias(
                 "bucket_start"
             ),
@@ -1048,17 +915,17 @@ def run_stream_stream_join_available_now(
             "click_price",
         )
 
-        def _append(batch_df: DataFrame, _epoch: int) -> None:
-            batch_df.write.mode("append").parquet(out_dir)
-
-        q = (
-            joined.writeStream.outputMode("append")
-            .foreachBatch(_append)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    out_dir, _ = _run_bounded(
+        spark,
+        sf_dir,
+        base_dir,
+        kinds[how],
+        pairs,
+        # inner joins emit matches in-batch; the OUTER variants need the
+        # final no-data batch's watermark advance to flush their
+        # null-padded rows
+        flush=how != "inner",
+    )
     return spark.read.parquet(out_dir).select(
         "bucket_start",
         F.timestamp_micros(F.col("purchase_us")).alias("purchase_time"),
@@ -1125,19 +992,9 @@ def run_stream_stream_interval_join_available_now(
     per-key arrival rate — the attribution window is the capacity knob,
     exactly how production click-attribution pipelines are sized.
     """
-    daily_dir = _ensure_daily_corpus(spark, sf_dir)
-    with _bounded_run_env(
-        spark, sf_dir, base_dir, "ssjoin_iv", skip_no_data_batch=True
-    ) as (  # inner interval join: matches emit in-batch
-        _raw_dir,
-        out_dir,
-        ckpt,
-    ):
-        ticks, _failed = tick_stream_from_raw(
-            raw_json_stream(
-                spark, daily_dir, max_files_per_trigger=files_per_trigger
-            ).select("value")
-        )
+
+    def attributed(raw: DataFrame) -> DataFrame:
+        ticks = tick_stream_from_raw(raw)[0]
         key = F.pmod(F.floor("price").cast("long"), key_buckets)
         left = (
             ticks.filter(F.col("symbol") == left_symbol)
@@ -1157,7 +1014,7 @@ def run_stream_stream_interval_join_available_now(
                 F.col("price").alias("click_price"),
             )
         )
-        joined = left.join(
+        return left.join(
             right,
             (F.col("user_key") == F.col("user_key2"))
             & (F.col("purchase_time") >= F.col("click_time"))
@@ -1175,17 +1032,14 @@ def run_stream_stream_interval_join_available_now(
             "click_price",
         )
 
-        def _append(batch_df: DataFrame, _epoch: int) -> None:
-            batch_df.write.mode("append").parquet(out_dir)
-
-        q = (
-            joined.writeStream.outputMode("append")
-            .foreachBatch(_append)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    out_dir, _ = _run_bounded(
+        spark,
+        sf_dir,
+        base_dir,
+        "ssjoin_iv",
+        attributed,
+        days_per_batch=files_per_trigger,
+    )
     return spark.read.parquet(out_dir).select(
         "user_key",
         F.timestamp_micros(F.col("purchase_us")).alias("purchase_time"),

@@ -11,7 +11,7 @@ of an HTTP sidecar.  A real deployment would forward the same events to a
 PushGateway/StatsD sink from ``onQueryProgress`` — the seam is the single
 ``_record`` call.
 
-Driver-side state is a deque of small dicts (bounded, default 256 batches)
+Driver-side state is a deque of small dicts (bounded, 256 batches)
 — no executor involvement, no extra jobs; listener callbacks run on the
 driver's listener bus thread exactly like Spark's own UI consumers.
 """
@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.listener import StreamingQueryListener
 
+RING_BATCHES = 256  # progress events the listener keeps
+
 PROGRESS_SCHEMA = (
     "query_name string, batch_id long, num_input_rows long, "
     "input_rows_per_second double, process_rows_per_second double, "
@@ -36,9 +38,9 @@ PROGRESS_SCHEMA = (
 class ProgressMetricsListener(StreamingQueryListener):
     """Capture per-batch progress events into a bounded ring buffer."""
 
-    def __init__(self, max_batches: int = 256) -> None:
+    def __init__(self) -> None:
         self._events: collections.deque[dict[str, Any]] = collections.deque(
-            maxlen=max_batches
+            maxlen=RING_BATCHES
         )
 
     # -- StreamingQueryListener interface ------------------------------
@@ -46,25 +48,7 @@ class ProgressMetricsListener(StreamingQueryListener):
         pass
 
     def onQueryProgress(self, event) -> None:  # noqa: N802
-        p = json.loads(event.progress.json)
-        ops = p.get("stateOperators") or []
-        self._record(
-            {
-                "query_name": p.get("name") or p.get("id"),
-                "batch_id": p.get("batchId", -1),
-                "num_input_rows": p.get("numInputRows", 0),
-                "input_rows_per_second": float(
-                    p.get("inputRowsPerSecond") or 0.0
-                ),
-                "process_rows_per_second": float(
-                    p.get("processedRowsPerSecond") or 0.0
-                ),
-                "batch_duration_ms": p.get("batchDuration", 0),
-                "state_rows": sum(
-                    op.get("numRowsTotal", 0) for op in ops
-                ),
-            }
-        )
+        self._record(progress_row(json.loads(event.progress.json)))
 
     def onQueryTerminated(self, event) -> None:  # noqa: N802
         pass
@@ -80,17 +64,34 @@ class ProgressMetricsListener(StreamingQueryListener):
         return list(self._events)
 
     def to_df(self, spark: SparkSession) -> DataFrame:
-        from stockpulse_batch_realtime_etl_spark.sources.tables import (
-            literal_df,
-        )
+        return progress_df(spark, self.snapshot())
 
-        rows = self.snapshot()
-        cols = PROGRESS_SCHEMA.split(", ")
-        names = [c.split(" ")[0] for c in cols]
-        # literal_df, not createDataFrame: no Python-RDD parallelize tasks
-        return literal_df(
-            spark, [tuple(r[n] for n in names) for r in rows], PROGRESS_SCHEMA
-        )
+
+def progress_row(p: dict[str, Any]) -> dict[str, Any]:
+    """One :data:`PROGRESS_SCHEMA` row from a ``StreamingQueryProgress``
+    dict (a listener event's JSON or an entry of ``recentProgress``)."""
+    return {
+        "query_name": str(p.get("name") or p.get("id")),
+        "batch_id": p.get("batchId", -1),
+        "num_input_rows": p.get("numInputRows", 0),
+        "input_rows_per_second": float(p.get("inputRowsPerSecond") or 0.0),
+        "process_rows_per_second": float(p.get("processedRowsPerSecond") or 0.0),
+        "batch_duration_ms": p.get("batchDuration", 0),
+        "state_rows": sum(
+            op.get("numRowsTotal", 0) for op in p.get("stateOperators") or []
+        ),
+    }
+
+
+def progress_df(spark: SparkSession, rows: list[dict[str, Any]]) -> DataFrame:
+    """Progress rows (:func:`progress_row`) as a ``PROGRESS_SCHEMA`` frame."""
+    from stockpulse_batch_realtime_etl_spark.sources.tables import literal_df
+
+    names = [c.split(" ")[0] for c in PROGRESS_SCHEMA.split(", ")]
+    # literal_df, not createDataFrame: no Python-RDD parallelize tasks
+    return literal_df(
+        spark, [tuple(r[n] for n in names) for r in rows], PROGRESS_SCHEMA
+    )
 
 
 def percentile_summary(
@@ -121,9 +122,9 @@ def percentile_summary(
     )
 
 
-def attach(spark: SparkSession, max_batches: int = 256) -> ProgressMetricsListener:
+def attach(spark: SparkSession) -> ProgressMetricsListener:
     """Register a fresh listener on the session's stream manager."""
-    listener = ProgressMetricsListener(max_batches)
+    listener = ProgressMetricsListener()
     spark.streams.addListener(listener)
     return listener
 

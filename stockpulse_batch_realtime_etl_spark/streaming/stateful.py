@@ -7,8 +7,8 @@ semantics Spark's built-in windowing can NOT express — state that never
 closes (a running aggregate since stream start), custom merge logic, and
 arbitrary per-group Python — while keeping the production shape:
 
-* state is a single fixed-width tuple per symbol (bounded memory,
-  RocksDB-backed at scale; no per-event state growth),
+* state is a single fixed-width tuple per symbol (bounded memory, no
+  per-event state growth),
 * each micro-batch arrives as Arrow-batched pandas frames (no per-row
   Python), is folded into state with vectorized ops, and emits exactly one
   row per active symbol per batch,
@@ -136,9 +136,10 @@ class RunningBarProcessor(StatefulProcessor):
     twin runs end-to-end here (driver-gated as ``streaming_running_bars``);
     THIS processor's fold is exercised by driving ``handleInputRows``
     directly against a stub ValueState in tests/test_stateful.py — exact
-    under any batch split, same property the gated twin proves.  On a real
-    cluster ``run_running_bars_available_now(api="transform_with_state")``
-    executes it unchanged.
+    under any batch split, same property the gated twin proves.  Running
+    :func:`running_bars_tws` on a real cluster also needs the RocksDB
+    state-store provider (transformWithState supports no other), whereas
+    this package's sessions set the HDFS-backed one.
     """
 
     def init(self, handle) -> None:
@@ -158,9 +159,11 @@ class RunningBarProcessor(StatefulProcessor):
 
 def running_bars_tws(ticks: DataFrame) -> DataFrame:
     """ticks stream → running OHLCV per symbol per micro-batch, via the
-    Spark 4 ``transformWithStateInPandas`` API (state backed by the same
-    RocksDB provider at scale; ``timeMode="None"`` — the running bar never
-    expires, exactly like the GroupStateTimeout.NoTimeout twin above)."""
+    Spark 4 ``transformWithStateInPandas`` API (``timeMode="None"`` — the
+    running bar never expires, exactly like the GroupStateTimeout.NoTimeout
+    twin above).  Needs a session whose
+    ``spark.sql.streaming.stateStore.providerClass`` is the RocksDB provider
+    and protobuf on the Python side; see :class:`RunningBarProcessor`."""
     return ticks.groupBy("symbol").transformWithStateInPandas(
         statefulProcessor=RunningBarProcessor(),
         outputStructType=OUTPUT_SCHEMA,

@@ -76,3 +76,9 @@ def test_dlq_preserves_kafka_coordinates_and_raw(split):
 def test_never_crashes_totals(split):
     # every input row lands exactly once on one side (consumer never crashes)
     assert split.ticks.count() + split.failed.count() == 6
+
+
+def test_valid_records_are_parsed_once(split):
+    # the validity filter must not re-run from_json below the tick projection
+    plan = split.ticks._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("from_json(") == 1, plan

@@ -129,6 +129,23 @@ def test_session_bars_split_exactly_at_gap(make_ticks):
     assert len(msft) == 1
 
 
+def test_session_bars_accept_an_interval_string_gap(make_ticks):
+    from stockpulse_batch_realtime_etl_spark.operators.ohlcv import session_bars
+
+    t = make_ticks(
+        [
+            ("AAPL", 1.0, 1, ts(0)),
+            ("AAPL", 2.0, 1, ts(1, 30)),   # exactly 90 s → still MERGES
+            ("AAPL", 3.0, 1, ts(3, 1)),    # 91 s > gap → NEW session
+        ]
+    )
+    rows = session_bars(t, "90 seconds").orderBy("session_start").collect()
+    assert [r.tick_count for r in rows] == [2, 1]
+    assert sorted(session_bars(t, "5 minutes").collect()) == sorted(
+        session_bars(t, 5).collect()
+    )
+
+
 def test_rollup_cascade_equals_direct_aggregation(make_ticks):
     """Mergeability invariant: 1m bars rolled to 1h == 1h bars from ticks."""
     from stockpulse_batch_realtime_etl_spark.operators.ohlcv import rollup_bars

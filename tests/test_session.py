@@ -21,6 +21,9 @@ def test_default_conf_fits_host(monkeypatch):
     assert conf["spark.sql.shuffle.partitions"] == str(usable)
     ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
     assert _mb(conf["spark.driver.memory"]) < ram_mb
+    assert conf["spark.sql.streaming.stateStore.providerClass"].endswith(
+        ".HDFSBackedStateStoreProvider"
+    )
 
 
 def test_env_overrides_win(monkeypatch):

@@ -185,6 +185,57 @@ def test_streaming_dedup_collapses_redelivered_rows(spark):
     assert total == distinct > 0
 
 
+def _corpus_build_fails(*_args, **_kwargs):
+    raise RuntimeError("corpus build failed")
+
+
+def test_bounded_run_restores_session_conf(spark, monkeypatch):
+    """A bounded run sets the no-data-batch conf only for its own duration:
+    after a clean run and after a run whose corpus build raises, the
+    session's settings are what they were before."""
+    keys = (
+        "spark.sql.streaming.noDataMicroBatches.enabled",
+        "spark.sql.shuffle.partitions",
+    )
+    before = {k: spark.conf.get(k, None) for k in keys}
+    job.run_dedup_available_now(spark, "/root/testdata/sf0.001")
+    assert {k: spark.conf.get(k, None) for k in keys} == before
+
+    monkeypatch.setattr(job, "_ensure_corpus", _corpus_build_fails)
+    with pytest.raises(RuntimeError, match="corpus build failed"):
+        job.run_dedup_available_now(spark, "/root/testdata/sf0.001")
+    assert {k: spark.conf.get(k, None) for k in keys} == before
+
+
+def test_bounded_bars_skip_trailing_no_data_batch(spark, tmp_path):
+    """A bounded bars run upserts every bar in its data batch, so it runs no
+    trailing no-data batch, and leaves the session's setting as it was."""
+    key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    before = spark.conf.get(key, None)
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "b.jsonl").write_text("\n".join(BATCH1))
+    ticks, _ = job.tick_stream_from_raw(job.raw_json_stream(spark, str(src)))
+    q = job.start_bar_aggregation(
+        ticks, str(tmp_path / "bars"), str(tmp_path / "ckpt"), available_now=True
+    )
+    q.awaitTermination(120)
+    assert spark.conf.get(key, None) == before
+    assert [p["numInputRows"] for p in q.recentProgress] == [6]
+
+
+def test_sector_rollup_unpersists_dim_when_setup_fails(spark, monkeypatch):
+    """The cached sector dimension is released even when the run fails
+    before its stream starts (here: while building the corpus)."""
+    from pyspark import StorageLevel
+
+    sf = "/root/testdata/sf0.001"
+    monkeypatch.setattr(job, "_ensure_corpus", _corpus_build_fails)
+    with pytest.raises(RuntimeError, match="corpus build failed"):
+        job.run_sector_rollup_available_now(spark, sf)
+    assert job.symbol_sector_dim(spark, sf).storageLevel == StorageLevel.NONE
+
+
 def test_metrics_listener_captures_progress(spark, tmp_path):
     """Prometheus-analog (reference main.py:47-67): the progress listener
     records one row per micro-batch with rate/duration/state columns."""
