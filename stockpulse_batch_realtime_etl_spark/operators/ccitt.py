@@ -340,20 +340,6 @@ def _row_to_runs(row) -> list:
     return runs
 
 
-def _runs_to_row(runs: list, w: int):
-    import numpy as np
-
-    row = np.zeros(w, np.int64)
-    pos = 0
-    color = 0
-    for run in runs:
-        if color:
-            row[pos : pos + run] = 1
-        pos += run
-        color ^= 1
-    return row
-
-
 # --- Modified Huffman (TIFF Compression 2) -----------------------------------
 
 

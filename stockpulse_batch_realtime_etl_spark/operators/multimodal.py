@@ -963,12 +963,6 @@ def _tiff_float_vals(x):
     return np.rint(scaled).astype(np.int64)
 
 
-def _encode_tiff_rgb(px, e: str, rps: int) -> bytes:
-    """Baseline chunky-RGB wrapper over :func:`_encode_tiff` (kept for
-    the container-level round-trip properties)."""
-    return _encode_tiff(px, e, rps, photometric=2, compression=1)
-
-
 def _encode_tiff(
     px, e: str, rps: int, photometric: int = 2, compression: int = 1,
     predictor: int = 1, tile: tuple | None = None, planar: bool = False,
@@ -3521,7 +3515,7 @@ def _ima_run(pred: int, idx: int, nibs: "np.ndarray") -> "np.ndarray":
     walk); parallelism lives one level up, across assets inside the
     Arrow batch.  The loop runs on Python ints over the precomputed
     ``_IMA_TBL`` (numpy scalar extraction per nibble was the r15
-    bottleneck — 0.19 MB/s/core in tools/codec_bench.py)."""
+    bottleneck — 0.19 MB/s/core)."""
     import numpy as np
 
     if idx > 88:

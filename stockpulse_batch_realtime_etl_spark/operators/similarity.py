@@ -1405,10 +1405,10 @@ def semantic_dedup(
 
     ``centroids`` injects a precomputed (cell, c_emb) table in place of
     the k-means training pass, and ``two_level``/``nprobe`` force the
-    assignment routing — the seams the forced-routing recall rung
-    (tools/semdedup_two_level_rung.py) uses to measure the production
-    two-level path end-to-end at ≥40k cells without a 40k-cell training
-    job.  Defaults leave every gate plan byte-identical.
+    assignment routing — the seams a forced-routing recall measurement
+    uses to run the production two-level path end-to-end at ≥40k cells
+    without a 40k-cell training job.  Defaults leave every gate plan
+    byte-identical.
     """
     if ncells is None:
         ncells = adaptive_ncells(embeddings.count())

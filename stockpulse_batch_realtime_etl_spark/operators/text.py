@@ -1788,8 +1788,8 @@ def bpe_learn_merges(
     work on a table ~10⁶ rows at 100 TB, measured 1.6× faster than
     materializing every round at sf0.1 (8 fewer job barriers).  At
     tokenizer scale that trade FLIPS, now measured rather than claimed
-    (``tools/scale_probe.py --bpe-sweep 256`` at sf0.1, where the
-    lowercase-alpha vocabulary exhausts mergeable pairs at 89 rounds):
+    (a 256-merge sweep at sf0.1, where the lowercase-alpha vocabulary
+    exhausts mergeable pairs at 89 rounds):
     lazy 34.8 s vs ``checkpoint_every=16`` 14.9 s vs ``=64`` 18.5 s, with
     IDENTICAL learned merges.  Pass ``checkpoint_every=k`` (k≈16) beyond
     a few dozen merges to cut the replay chain every k rounds, bounding

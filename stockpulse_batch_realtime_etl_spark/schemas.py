@@ -87,7 +87,7 @@ STOCK_BARS_SCHEMA = StructType(
         StructField("low", DoubleType()),
         StructField("close", DoubleType()),
         StructField("volume_sum", LongType()),
-        StructField("tick_count", IntegerType()),
+        StructField("tick_count", LongType()),
     ]
 )
 

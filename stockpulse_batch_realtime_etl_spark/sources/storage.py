@@ -6,22 +6,27 @@ on stock_ticks and ``(symbol, bucket_start DESC)`` on stock_bars_1m
 (infra/postgres/init.sql:10-11, 27-28), exist to make "latest N for one
 symbol" an index-only backward scan.  The columnar equivalent:
 
-* **partition by (symbol, date)** — a symbol-equality predicate prunes to
-  that symbol's directories (PartitionFilters in the scan), a time
-  predicate prunes dates; at 100 TB a /symbols/latest query touches only
-  the last date dirs of one symbol instead of the whole table;
-* **sort within files by event_time** — parquet column min/max row-group
-  statistics then skip row groups for time ranges (the DESC-scan analog);
+* **ticks: partition by (symbol, date)** — a symbol-equality predicate
+  prunes to that symbol's directories (PartitionFilters in the scan), a
+  time predicate prunes dates;
+* **bars: partition by date**, one file per day — the streaming upsert
+  rewrites whole days, and a symbol level would split each into a file
+  per symbol.  Batch build and upsert share ONE writer, :func:`_write_bars`;
+* **sort within files** by time (bars: symbol, then time) — parquet
+  min/max row-group statistics skip the rest (the DESC-scan analog);
 * top-k over the pruned scan is ``TakeOrderedAndProject`` — no full sort.
 
 ``tests/test_storage.py`` asserts the pruning actually happens (the plan's
-PartitionFilters, not just intent).
+PartitionFilters, not just intent) and that both bars writers agree.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+from stockpulse_batch_realtime_etl_spark.schemas import STOCK_BARS_SCHEMA
 
 
 def write_ticks_partitioned(ticks: DataFrame, path: str) -> None:
@@ -38,16 +43,60 @@ def write_ticks_partitioned(ticks: DataFrame, path: str) -> None:
     )
 
 
-def write_bars_partitioned(bars: DataFrame, path: str) -> None:
-    """Bars layout: ``path/symbol=X/bucket_date=D/`` (init.sql:27-28 analog)."""
+#: The bars table's key: the reference's unique (symbol, bucket_start).
+BARS_KEY = ("symbol", "bucket_start")
+
+
+def _write_bars(bars: DataFrame, path: str, dynamic: bool) -> int:
+    """THE bars table format: ``path/bucket_date=D/``, one file per day,
+    sorted by ``BARS_KEY``, columns cast to ``STOCK_BARS_SCHEMA`` so every
+    caller writes the same types.  ``dynamic`` replaces only the days in
+    ``bars``, else the whole table.  Returns the rows written, observed
+    above the shuffle (below it, AQE drops an empty shuffle's metrics)."""
+    columns = [F.col(f.name).cast(f.dataType) for f in STOCK_BARS_SCHEMA]
+    written = Observation()
     (
-        bars.withColumn("bucket_date", F.to_date("bucket_start"))
-        .repartition("symbol", "bucket_date")
-        .sortWithinPartitions("bucket_start")
+        bars.select(*columns, F.to_date("bucket_start").alias("bucket_date"))
+        .repartition("bucket_date")
+        .sortWithinPartitions("bucket_date", *BARS_KEY)
+        .observe(written, F.count(F.lit(1)).alias("n"))
         .write.mode("overwrite")
-        .partitionBy("symbol", "bucket_date")
+        .option("partitionOverwriteMode", "dynamic" if dynamic else "static")
+        .partitionBy("bucket_date")
         .parquet(path)
     )
+    return written.get["n"]
+
+
+def write_bars_partitioned(bars: DataFrame, path: str) -> None:
+    """Replace the whole bars table at ``path`` with ``bars``, in the
+    format the streaming upsert writes (:func:`_write_bars`)."""
+    _write_bars(bars, path, dynamic=False)
+
+
+def upsert_bars(batch: DataFrame, path: str) -> int:
+    """Upsert ``batch`` into the bars table keyed on ``BARS_KEY`` (the
+    reference's ON CONFLICT DO UPDATE, aggregator.py:41-51), rewriting only
+    the days it touches; returns its row count.  A first write is one write.
+    Later ones persist the batch for its three reads: one collect gives the
+    row count and the days, which the table read takes as a static
+    partition filter (a join on ``bucket_date`` gets no dynamic pruning)."""
+    # try-scope is EXACTLY the table read: a wider scope would take any
+    # later analysis error (e.g. from a stray file) as a first write
+    try:
+        table = batch.sparkSession.read.parquet(path)
+    except AnalysisException:  # no table yet, or only an empty write
+        return _write_bars(batch, path, dynamic=True)
+    batch.persist()
+    try:
+        per_day = batch.groupBy(F.to_date("bucket_start").alias("d")).count().collect()
+        if per_day:
+            days = table.filter(F.col("bucket_date").isin([r["d"] for r in per_day]))
+            keep = days.join(batch.select(*BARS_KEY), list(BARS_KEY), "left_anti")
+            _write_bars(keep.drop("bucket_date").unionByName(batch), path, True)
+        return sum(r["count"] for r in per_day)
+    finally:
+        batch.unpersist()
 
 
 def read_ticks(spark: SparkSession, path: str) -> DataFrame:
@@ -90,18 +139,12 @@ def compact_partitioned(
     partition_col: str,
     max_records_per_file: int = 5_000_000,
 ) -> None:
-    """Small-file compaction: rewrite a partitioned table with one
-    right-sized file set per partition.
-
-    Why it exists: every streaming micro-batch appends its own files (the
-    upsert sink writes per-trigger), so a long-running stream accretes
-    thousands of KB-scale files per partition — and at 100 TB, file-listing
-    and per-file open overhead come to dominate scan time.  Periodic
-    compaction (read → one shuffle on the partition key → rewrite with
-    ``maxRecordsPerFile``) restores scan-friendly file sizes; the write
-    target is a fresh path, swapped in atomically by the caller (rename or
-    view/manifest flip), never an in-place overwrite of the directory being
-    read.
+    """Small-file compaction: rewrite the partitioned table at ``src`` into
+    the fresh path ``dst`` with one right-sized file set per partition
+    (one shuffle on the partition key, ``maxRecordsPerFile``), for tables
+    that appending writers (a file sink, per-trigger appends) fill with
+    small files.  The bars writer already writes one file per day.  The
+    caller swaps ``dst`` in; the table being read is never overwritten.
     """
     df = spark.read.parquet(src)
     (

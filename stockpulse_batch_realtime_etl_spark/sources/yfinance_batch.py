@@ -49,35 +49,6 @@ YFINANCE_FIXTURE: list[dict[str, Any]] = [
 ]
 
 
-def fetch_live(symbols: list[str]) -> list[dict[str, Any]] | None:
-    """Fetch one wide row per symbol via yfinance, or None when the library
-    (or the network) is unavailable — callers fall back to the fixture."""
-    try:  # pragma: no cover - yfinance not installed in the test container
-        import yfinance as yf
-    except ImportError:
-        return None
-    data = yf.download(  # pragma: no cover
-        " ".join(symbols), period="1d", interval="1m",
-        progress=False, group_by="ticker",
-    )
-    if data is None or data.empty:  # pragma: no cover
-        return None
-    rows: list[dict[str, Any]] = []  # pragma: no cover
-    for sym in symbols:  # pragma: no cover
-        latest = data[sym].dropna().iloc[-1]
-        rows.append({
-            "symbol": sym,
-            "open": round(float(latest["Open"]), 2),
-            "high": round(float(latest["High"]), 2),
-            "low": round(float(latest["Low"]), 2),
-            "close": round(float(latest["Close"]), 2),
-            "volume": int(latest["Volume"]),
-            "event_time": latest.name.isoformat(),
-            "source": "yfinance",
-        })
-    return rows  # pragma: no cover
-
-
 def yfinance_ticks(
     spark: SparkSession, rows: list[dict[str, Any]] | None = None
 ) -> DataFrame:

@@ -11,8 +11,9 @@ ST2    closed-minutes-only emission → watermark-delayed windows; with
        update-mode + upsert the in-progress window refines per batch and
        settles once the watermark passes (strictly better than the
        reference, which silently drops post-watermark late ticks)
-ST3    ``INSERT … ON CONFLICT DO UPDATE`` → foreachBatch merge keyed on
-       (symbol, bucket_start) with date-partition rewrite
+ST3    ``INSERT … ON CONFLICT DO UPDATE`` → foreachBatch upsert keyed on
+       (symbol, bucket_start) that rewrites only the touched days
+       (``sources.storage.upsert_bars``)
 ST4    30 s aggregation cadence → ``trigger(processingTime="30 seconds")``
 ST5    tumbling 1-minute window → ``window(event_time, "1 minute")``
 ST6    late data within watermark → captured by state update + re-upsert
@@ -20,14 +21,12 @@ ST7    at-least-once consumer → checkpointed source offsets + idempotent
        (keyed) sink = effectively-once
 =====  ==================================================================
 
-Sink design without Delta: the bars table is Parquet partitioned by
-``bucket_date``.  Each micro-batch rewrites ONLY the date partitions it
-touches (dynamic partition overwrite): existing rows for other keys in the
-touched partitions are retained via an anti-join union.  At production
-scale a day partition of 1-minute bars is ~1440 × n_symbols rows — small,
-so the rewrite amplification is bounded and bulk backfills stay partition-
-parallel.  (With Delta/Iceberg available this collapses to ``MERGE INTO``;
-the surrounding plumbing is unchanged.)
+Sink design without Delta: the bars table format is ``sources/storage``'s,
+shared with the batch build: Parquet partitioned by ``bucket_date``, one
+file per day.  Each micro-batch rewrites ONLY the days it touches (dynamic
+partition overwrite), keeping their other keys' rows via an anti-join.  A
+day is ~1440 × n_symbols bars, so the rewrite amplification is bounded.
+(With Delta/Iceberg this collapses to ``MERGE INTO``.)
 
 Bounded runs: every ``run_*`` function below is one stream definition
 handed to :func:`_run_bounded`, which wipes its directories, builds the
@@ -53,9 +52,9 @@ from stockpulse_batch_realtime_etl_spark.operators.ohlcv import (
     bar_agg_exprs,
     session_bars,
 )
+from stockpulse_batch_realtime_etl_spark.sources import storage
 from stockpulse_batch_realtime_etl_spark.sources.dlq import split_raw_stream
-
-BARS_KEY = ("symbol", "bucket_start")
+from stockpulse_batch_realtime_etl_spark.sources.tables import literal_df
 
 
 def raw_json_stream(
@@ -109,59 +108,18 @@ def windowed_bars(ticks: DataFrame, watermark: str = "2 minutes") -> DataFrame:
 def upsert_bars_batch(
     batch: DataFrame, table_path: str, audit_path: str | None = None
 ) -> None:
-    """foreachBatch body: MERGE the micro-batch into the bars table keyed on
-    (symbol, bucket_start) — the reference's ON CONFLICT DO UPDATE
-    (aggregator.py:41-51) — rewriting only touched date partitions."""
-    spark = batch.sparkSession
+    """foreachBatch body: :func:`storage.upsert_bars`, then the etl_runs
+    audit row — also for an empty batch, as a liveness heartbeat (ST1)."""
     started = time.time()
-    batch = batch.withColumn("bucket_date", F.to_date("bucket_start"))
-    batch.persist()
-    try:
-        # one job yields both the row count and the touched partition list
-        per_date = batch.groupBy("bucket_date").count().collect()
-        n = sum(r["count"] for r in per_date)
-        if n == 0:
-            # no table rewrite, but the etl_runs audit row is still
-            # written — an idle trigger is a liveness heartbeat (ST1)
-            if audit_path:
-                _write_audit(spark, audit_path, n, started)
-            return
-        dates = [r["bucket_date"] for r in per_date]
-        from pyspark.errors import AnalysisException
-
-        # try-scope is EXACTLY the table read: a wider scope would classify
-        # any downstream analysis error (e.g. an unresolved column from a
-        # stray file in table_path) as "first batch" and dynamic-overwrite
-        # would silently delete other symbols' bars in the touched dates
-        try:
-            existing_tbl = spark.read.parquet(table_path)
-        except AnalysisException:  # first batch: table doesn't exist yet
-            merged = batch
-        else:
-            existing = existing_tbl.filter(F.col("bucket_date").isin(dates))
-            keep = existing.join(
-                batch.select(*BARS_KEY), list(BARS_KEY), "left_anti"
-            )
-            merged = keep.unionByName(batch)
-        (
-            merged.repartition("bucket_date")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket_date")
-            .parquet(table_path)
-        )
-        if audit_path:
-            _write_audit(spark, audit_path, n, started)
-    finally:
-        batch.unpersist()
+    n = storage.upsert_bars(batch, table_path)
+    if audit_path:
+        _write_audit(batch.sparkSession, audit_path, n, started)
 
 
 def _write_audit(
     spark: SparkSession, audit_path: str, n: int, started: float
 ) -> None:
     """Append one etl_runs audit row (aggregator.py:138-150 parity)."""
-    from stockpulse_batch_realtime_etl_spark.sources.tables import literal_df
-
     # literal_df, not createDataFrame: this runs once PER MICRO-BATCH
     audit = literal_df(
         spark,
@@ -194,9 +152,7 @@ def start_bar_aggregation(
     writer = (
         bars.writeStream.outputMode("update")
         .option("checkpointLocation", checkpoint)
-        .foreachBatch(
-            lambda df, _epoch: upsert_bars_batch(df, table_path, audit_path)
-        )
+        .foreachBatch(lambda df, _: upsert_bars_batch(df, table_path, audit_path))
     )
     return _start(ticks.sparkSession, writer, available_now, trigger_secs)
 

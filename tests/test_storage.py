@@ -119,3 +119,54 @@ def test_compaction_reduces_files_preserves_rows(spark, tmp_path_factory):
     assert (
         spark.read.parquet(dst).count() == spark.read.parquet(src).count() > 0
     )
+
+
+def _table_format(spark, path):
+    """(parquet files per directory under ``path``, table schema)."""
+    import os
+
+    files = {
+        d: [f for f in os.listdir(os.path.join(path, d)) if f.endswith(".parquet")]
+        for d in sorted(os.listdir(path))
+        if os.path.isdir(os.path.join(path, d))
+    }
+    return files, spark.read.parquet(path).schema.simpleString()
+
+
+def test_batch_build_and_streaming_upsert_write_one_bars_format(spark, tmp_path):
+    """The batch build and the streaming upsert write the same table:
+    only ``bucket_date=*`` directories, one parquet file per day, and the
+    same column names and types (``STOCK_BARS_SCHEMA`` plus the day)."""
+    from pyspark.sql.types import DateType, StructField, StructType
+
+    from stockpulse_batch_realtime_etl_spark.schemas import STOCK_BARS_SCHEMA
+    from stockpulse_batch_realtime_etl_spark.streaming import job
+
+    # tick_count int, as a hand-built frame says it; ``count`` gives bigint
+    bars = spark.createDataFrame(
+        [
+            ("AAPL", "2024-01-15 12:05:00", 1.0, 2.0, 0.5, 1.5, 10, 2),
+            ("MSFT", "2024-01-15 12:05:00", 4.0, 4.5, 3.5, 4.2, 20, 3),
+            ("AAPL", "2024-01-16 09:30:00", 1.1, 2.1, 0.6, 1.6, 30, 4),
+        ],
+        "symbol string, bucket_start string, open double, high double, "
+        "low double, close double, volume_sum long, tick_count int",
+    ).withColumn("bucket_start", F.to_timestamp("bucket_start"))
+    built, upserted = str(tmp_path / "built"), str(tmp_path / "upserted")
+    storage.write_bars_partitioned(bars, built)
+    job.upsert_bars_batch(bars, upserted)
+    files_b, schema_b = _table_format(spark, built)
+    files_u, schema_u = _table_format(spark, upserted)
+    days = ["bucket_date=2024-01-15", "bucket_date=2024-01-16"]
+    assert list(files_b) == list(files_u) == days
+    assert [len(v) for v in files_b.values()] == [1, 1]
+    assert [len(v) for v in files_u.values()] == [1, 1]
+    expected = StructType(
+        [*STOCK_BARS_SCHEMA.fields, StructField("bucket_date", DateType())]
+    ).simpleString()
+    assert schema_b == schema_u == expected
+    assert "tick_count:bigint" in expected
+    built_df, upserted_df = spark.read.parquet(built), spark.read.parquet(upserted)
+    assert built_df.count() == 3
+    assert built_df.exceptAll(upserted_df).count() == 0
+    assert upserted_df.exceptAll(built_df).count() == 0

@@ -172,6 +172,162 @@ def test_upsert_writes_audit_row(spark, tmp_path):
     assert row.completed_at >= row.started_at
 
 
+def _bars(spark, rows):
+    """Bars frame from ``(symbol, "YYYY-MM-DD HH:MM", close)`` rows."""
+    import datetime as dt
+
+    return spark.createDataFrame(
+        [
+            (s, dt.datetime.strptime(t, "%Y-%m-%d %H:%M"), c, c, c, c, 10, 1)
+            for s, t, c in rows
+        ],
+        "symbol string, bucket_start timestamp, open double, high double, "
+        "low double, close double, volume_sum long, tick_count long",
+    )
+
+
+TWO_DAYS = [("AAPL", "2024-01-15 12:05", 1.0), ("MSFT", "2024-01-15 12:05", 2.0),
+            ("AAPL", "2024-01-16 09:30", 3.0)]
+
+
+def _data_files(table):
+    """Every parquet file of ``table``: relative path -> (size, mtime_ns)."""
+    import os
+
+    out = {}
+    for root, _dirs, files in os.walk(table):
+        for f in files:
+            if f.endswith(".parquet"):
+                st = os.stat(os.path.join(root, f))
+                out[os.path.relpath(os.path.join(root, f), table)] = (
+                    st.st_size, st.st_mtime_ns)
+    return out
+
+
+def test_first_upsert_is_one_write(spark, tmp_path):
+    """A table's first upsert writes the batch once, without the count job
+    or the cache: at most 2 Spark jobs (the day shuffle and the write),
+    counted through the job group they run in."""
+    table = str(tmp_path / "bars")
+    batch = _bars(spark, TWO_DAYS)
+    sc = spark.sparkContext
+    sc.setJobGroup("first-upsert", "first upsert")
+    try:
+        job.upsert_bars_batch(batch, table)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("first-upsert")) <= 2
+    assert spark.read.parquet(table).count() == 3
+
+
+def test_upsert_computes_its_batch_once(spark, tmp_path):
+    """A micro-batch is a stateful aggregation's output, so the upsert must
+    compute it once: the first write reads it once, a later write persists
+    it for its three reads.  A UDF on the key, which every read needs,
+    counts the rows computed."""
+    from pyspark.sql import functions as F
+
+    computed = spark.sparkContext.accumulator(0)
+
+    def bucket_start(x):
+        computed.add(1)
+        return x
+
+    base = _bars(spark, TWO_DAYS)
+    batch = base.withColumn(
+        "bucket_start", F.udf(bucket_start, "timestamp")("bucket_start"))
+    table = str(tmp_path / "bars")
+    for _ in range(2):  # first write, then into the existing table
+        before = computed.value
+        job.upsert_bars_batch(batch, table)
+        assert computed.value - before == len(TWO_DAYS)
+
+
+def _write_plans_after(spark, execution_id):
+    """Physical plans of the file writes the SQL status store records after
+    ``execution_id``; the store is fed by the listener bus, so wait for it."""
+    import time
+
+    store = spark._jsparkSession.sharedState().statusStore()
+    deadline = time.time() + 30
+    while True:
+        found = store.executionsList()
+        plans = [
+            e.physicalPlanDescription()
+            for e in (found.apply(i) for i in range(found.size()))
+            if e.executionId() > execution_id
+        ]
+        writes = [p for p in plans if "InsertIntoHadoopFsRelationCommand" in p]
+        if writes or time.time() > deadline:
+            return writes
+        time.sleep(0.1)
+
+
+def test_upsert_rewrites_only_touched_days(spark, tmp_path):
+    """An upsert into an existing table rewrites only the days its batch
+    touches, and reads those days through a static partition filter."""
+    import re
+
+    table = str(tmp_path / "bars")
+    job.upsert_bars_batch(_bars(spark, TWO_DAYS), table)
+    before = _data_files(table)
+    found = spark._jsparkSession.sharedState().statusStore().executionsList()
+    seen = max(found.apply(i).executionId() for i in range(found.size()))
+    job.upsert_bars_batch(_bars(spark, [("AAPL", "2024-01-15 12:05", 9.0)]), table)
+    after = _data_files(table)
+    untouched = {k: v for k, v in before.items()
+                 if k.startswith("bucket_date=2024-01-16")}
+    assert untouched and all(after.get(k) == v for k, v in untouched.items())
+    assert not (set(before) - set(untouched)) & set(after)  # touched: new file
+    rows = {(r.symbol, str(r.bucket_start)): r.close
+            for r in spark.read.parquet(table).collect()}
+    assert rows == {("AAPL", "2024-01-15 12:05:00"): 9.0,
+                    ("MSFT", "2024-01-15 12:05:00"): 2.0,
+                    ("AAPL", "2024-01-16 09:30:00"): 3.0}
+    (write,) = _write_plans_after(spark, seen)
+    filters = re.findall(r"PartitionFilters: \[(.*?)\]", write)
+    assert filters and all("2024-01-15" in f for f in filters), filters
+
+
+def test_first_upsert_keeps_days_it_does_not_touch(spark, tmp_path):
+    """A batch taken as a first write (the table read raised) still
+    replaces only its own days: here the table holds a day with no data
+    files yet, whose directory must survive."""
+    table = tmp_path / "bars"
+    other = table / "bucket_date=2024-01-20"
+    other.mkdir(parents=True)
+    (other / "_marker").write_text("kept")
+    job.upsert_bars_batch(_bars(spark, TWO_DAYS[:1]), str(table))
+    assert (other / "_marker").read_text() == "kept"
+    assert spark.read.parquet(str(table)).count() == 1
+
+
+def test_empty_upsert_leaves_table_files_alone(spark, tmp_path):
+    """An empty batch into an existing table changes no data file (names,
+    sizes, mtimes) and still writes its audit row with 0 records."""
+    table, audit = str(tmp_path / "bars"), str(tmp_path / "audit")
+    job.upsert_bars_batch(_bars(spark, TWO_DAYS), table)
+    before = _data_files(table)
+    job.upsert_bars_batch(_bars(spark, []), table, audit_path=audit)
+    assert _data_files(table) == before
+    (row,) = spark.read.parquet(audit).collect()
+    assert row.records_processed == 0
+
+
+def test_empty_first_upsert_then_a_batch(spark, tmp_path):
+    """An empty first batch, then a non-empty one: the table holds exactly
+    the second batch's rows, and each audit row counts its own batch."""
+    table, audit = str(tmp_path / "bars"), str(tmp_path / "audit")
+    job.upsert_bars_batch(_bars(spark, []), table, audit_path=audit)
+    second = _bars(spark, TWO_DAYS)
+    job.upsert_bars_batch(second, table, audit_path=audit)
+    out = spark.read.parquet(table).drop("bucket_date")
+    assert out.count() == 3
+    assert out.exceptAll(second).count() == 0 and second.exceptAll(out).count() == 0
+    counts = sorted(r.records_processed for r in spark.read.parquet(audit).collect())
+    assert counts == [0, 3]
+
+
 def test_streaming_dedup_collapses_redelivered_rows(spark):
     """The bounded dedup run streams the corpus + a redelivered 20% slice;
     output must equal the clean corpus' DISTINCT keys with no duplicates."""

@@ -12,9 +12,8 @@ their top-``nprobe`` supers and argmax over the union of those supers'
 children) and sweeps (nsuper, nprobe) decades that would take hours through
 Spark at 4M cells.  The Spark implementation itself is pinned equal to this
 semantics by the exactness tests (flat ≡ two-level on a margin-structured
-corpus; nprobe ≥ nsuper ≡ flat on any corpus) and by
-``tools/scale_probe.py --two-level-probe``'s agreement rung — what is
-measured here is purely how routing QUALITY scales with nsuper.
+corpus; nprobe ≥ nsuper ≡ flat on any corpus) — what is measured here is
+purely how routing QUALITY scales with nsuper.
 
 Corpus model (same device as the r9 800-cluster measurement): ``ncells``
 random unit cluster centers in d=64 (the testdata embedding dim); the
