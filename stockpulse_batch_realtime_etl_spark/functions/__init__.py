@@ -1,12 +1,6 @@
 from stockpulse_batch_realtime_etl_spark.functions.scalars import (  # noqa: F401
     change_pct,
-    iso_to_timestamp,
-    minute_bucket,
-    minute_floor,
     null_safe_volume,
     pct_change,
     round4,
-    symbol_is_valid,
-    tick_to_json,
-    upper_symbol,
 )

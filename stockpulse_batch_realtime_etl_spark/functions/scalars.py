@@ -1,29 +1,26 @@
-"""The reference's scalar-function surface (SURVEY.md §2.7, F1-F13) as a
+"""The reference's shared scalar functions (SURVEY.md §2.7, F1-F13) as a
 named Column library.
 
-Every scalar the reference applies anywhere — in SQL strings or Python
-post-processing — exists here as one composable, codegen-able Catalyst
-expression; operators import these instead of re-spelling the arithmetic.
+The scalars operators import exist here, each as one composable,
+codegen-able Catalyst expression, so no operator re-spells the arithmetic.
 No Python UDFs: the reference needs none (SURVEY.md §2.9) and neither do we,
 so the whole scalar layer stays inside whole-stage codegen.
 
 =====  ==========================================  =========================
-F1     date_trunc('minute', ts)                    minute_bucket
 F2     ROUND(x::numeric, 4)                        round4
 F3     COALESCE(volume, 0)                         null_safe_volume
 F4+F6  (close-open)/NULLIF(open,0)*100 @ 4dp       change_pct / pct_change
 F5     ABS(x)                                      (pyspark built-in F.abs)
-F7     upper(symbol)                               upper_symbol
-F8     regex ^[A-Za-z]{1,10}$                      symbol_is_valid
-F10    ISO-8601 parse                              iso_to_timestamp
-F11    json.dumps(tick)                            tick_to_json
-F12    datetime.replace(second=0, microsecond=0)   minute_floor
+F8     regex ^[A-Za-z]{1,10}$                      SYMBOL_RE (serving)
 =====  ==========================================  =========================
 
-(F9, the NOW()-relative window bound, is a *predicate* builder — it lives in
-operators/serving.py ``_window_filter`` as a scalar subquery.  F13, the
-NUMERIC→float coercion, is moot: we compute in DoubleType throughout,
-SURVEY.md §1.4.)
+The rest are written once where they are used: F1/F12, the minute bucket
+``date_trunc('minute', ts)``, in operators/ohlcv.py; F7 ``upper(symbol)``
+and F10, the ISO-8601 parse, in the one ingest path, sources/dlq.py; F11,
+the tick's JSON, in sources/kafka.encode_ticks_for_kafka.  F9, the
+NOW()-relative window bound, is a *predicate* builder — it lives in
+operators/serving.py ``_window_filter``.  F13, the NUMERIC→float coercion,
+is moot: we compute in DoubleType throughout, SURVEY.md §1.4.
 """
 
 from __future__ import annotations
@@ -33,11 +30,6 @@ from pyspark.sql import functions as F
 
 #: F8 — services/api/app/routers/ticks.py:10 (same regex in bars.py:10).
 SYMBOL_RE = "^[A-Za-z]{1,10}$"
-
-
-def minute_bucket(ts: Column) -> Column:
-    """F1 — aggregator.py:29,38: the 1-minute bucket key."""
-    return F.date_trunc("minute", ts)
 
 
 def ts_micros(ts: Column | str) -> Column:
@@ -73,32 +65,3 @@ def change_pct(open_col: Column, close_col: Column) -> Column:
     """bars.py:141 / bars.py:90-96: pct_change rounded at 4dp, aliased the
     way every reference endpoint emits it."""
     return round4(pct_change(open_col, close_col)).alias("change_pct")
-
-
-def upper_symbol(symbol: Column) -> Column:
-    """F7 — ticks.py:19: post-validation symbol normalization."""
-    return F.upper(symbol)
-
-
-def symbol_is_valid(symbol: Column) -> Column:
-    """F8 — ticks.py:10: the symbol validation predicate as a Column (the
-    API-layer 422 guard in relational form, SURVEY.md P5)."""
-    return symbol.rlike(SYMBOL_RE)
-
-
-def iso_to_timestamp(s: Column) -> Column:
-    """F10 — producer.py:73 / consumer.py:82: ISO-8601 → timestamp; null on
-    unparseable input (the DLQ predicate picks those up)."""
-    return F.try_to_timestamp(s)
-
-
-def tick_to_json(*cols: str) -> Column:
-    """F11 — producer.py:87: JSON-serialize a tick row (Kafka value)."""
-    return F.to_json(F.struct(*cols))
-
-
-def minute_floor(ts: Column) -> Column:
-    """F12 — aggregator.py:124: 'now' floored to the minute (the closed-
-    window upper bound).  Same expression as F1; named for the distinct
-    reference role."""
-    return F.date_trunc("minute", ts)

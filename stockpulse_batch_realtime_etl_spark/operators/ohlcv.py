@@ -33,15 +33,14 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 #: Aggregate expressions shared by the batch and streaming bar paths.
-def bar_agg_exprs(
-    price: str = "price", event_time: str = "event_time", volume: str = "volume"
-) -> list[Column]:
+def bar_agg_exprs() -> list[Column]:
+    price, event_time = F.col("price"), F.col("event_time")
     return [
-        F.min_by(F.col(price), F.col(event_time)).alias("open"),
-        F.max(F.col(price)).alias("high"),
-        F.min(F.col(price)).alias("low"),
-        F.max_by(F.col(price), F.col(event_time)).alias("close"),
-        F.sum(F.coalesce(F.col(volume), F.lit(0))).alias("volume_sum"),
+        F.min_by(price, event_time).alias("open"),
+        F.max(price).alias("high"),
+        F.min(price).alias("low"),
+        F.max_by(price, event_time).alias("close"),
+        F.sum(F.coalesce(F.col("volume"), F.lit(0))).alias("volume_sum"),
         F.count(F.lit(1)).alias("tick_count"),
     ]
 
@@ -213,7 +212,7 @@ def rollup_bars(bars: DataFrame, unit: str = "hour") -> DataFrame:
 
 
 def gapfill_bars(
-    bars: DataFrame, step: str = "1 minute", bucket_seconds: int | None = 86_400
+    bars: DataFrame, bucket_seconds: int | None = 86_400
 ) -> DataFrame:
     """Gap-filled continuous bar series: emit EVERY bucket in each symbol's
     [min, max] span, carrying the last known close forward through silent
@@ -225,7 +224,7 @@ def gapfill_bars(
     builds the dense grid JVM-side (no driver loop, no Python) → left join
     real bars (grid and bars share the (symbol, bucket) key — with bars
     bucketed/partitioned by symbol this is co-located) → LOCF carry.
-    Grid size is span/step rows per symbol — generation is O(output),
+    Grid size is the span in minutes per symbol — generation is O(output),
     unavoidable and embarrassingly parallel.
 
     LOCF at scale (default): an unbounded-preceding ``last(ignorenulls)``
@@ -243,7 +242,7 @@ def gapfill_bars(
     grid = span.select(
         "symbol",
         F.explode(
-            F.sequence("mn", "mx", F.expr(f"INTERVAL {step}"))
+            F.sequence("mn", "mx", F.expr("INTERVAL 1 minute"))
         ).alias("bucket_start"),
     )
     joined = grid.join(

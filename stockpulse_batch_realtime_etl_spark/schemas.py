@@ -1,7 +1,7 @@
-"""Explicit StructTypes for every table in the engine's data model.
+"""Explicit StructTypes for the engine's data model.
 
-Mirrors the reference DDL (infra/postgres/init.sql:1-48) and the two on-wire
-tick shapes (producer.py:66-74 narrow; producer_yfinance.py:100-109 wide).
+Mirrors the reference DDL (infra/postgres/init.sql:1-48; the ticks table's
+types are the ingest split's, sources/dlq.py) and the two on-wire tick shapes (producer.py:66-74 narrow; producer_yfinance.py:100-109 wide).
 Per SURVEY.md §1.4 we compute in DoubleType (the reference's API layer coerces
 NUMERIC → float at serialization, so end-to-end precision is double) and only
 round at the reference's visible rounding points (``round(x, 4)``).
@@ -23,33 +23,12 @@ from pyspark.sql.types import (
 
 # --- on-wire tick shapes (SURVEY.md §1.2) -----------------------------------
 
-#: Narrow tick — simulated producer (producer.py:66-74).
-TICK_NARROW_SCHEMA = StructType(
-    [
-        StructField("symbol", StringType()),
-        StructField("price", DoubleType()),
-        StructField("volume", LongType()),
-        StructField("event_time", StringType()),  # ISO-8601; to_timestamp downstream
-    ]
-)
-
-#: Wide tick — yfinance producer (producer_yfinance.py:100-109); has NO price.
-TICK_WIDE_SCHEMA = StructType(
-    [
-        StructField("symbol", StringType()),
-        StructField("open", DoubleType()),
-        StructField("high", DoubleType()),
-        StructField("low", DoubleType()),
-        StructField("close", DoubleType()),
-        StructField("volume", LongType()),
-        StructField("event_time", StringType()),
-        StructField("source", StringType()),
-    ]
-)
-
-#: Union decode schema: superset of both shapes. ``from_json`` in PERMISSIVE
-#: mode leaves absent fields null, so one schema decodes both producers;
-#: normalization is ``price := coalesce(price, close)`` (SURVEY.md §1.2).
+#: Union decode schema: superset of both producer shapes, the narrow
+#: ``{symbol, price, volume, event_time}`` (producer.py:66-74) and the wide
+#: ``{symbol, open, high, low, close, volume, event_time, source}`` with no
+#: price (producer_yfinance.py:100-109).  ``from_json`` in PERMISSIVE mode
+#: leaves absent fields null, so one schema decodes both producers;
+#: sources/dlq.py normalizes ``price := coalesce(price, close)``.
 TICK_UNION_SCHEMA = StructType(
     [
         StructField("symbol", StringType()),
@@ -65,17 +44,6 @@ TICK_UNION_SCHEMA = StructType(
 )
 
 # --- stored tables (init.sql) ----------------------------------------------
-
-#: ``stock_ticks`` (init.sql:1-8).  BIGSERIAL id omitted (no semantic use).
-STOCK_TICKS_SCHEMA = StructType(
-    [
-        StructField("symbol", StringType(), nullable=False),
-        StructField("price", DoubleType(), nullable=False),
-        StructField("volume", LongType(), nullable=True),
-        StructField("event_time", TimestampType(), nullable=False),
-        StructField("created_at", TimestampType(), nullable=True),
-    ]
-)
 
 #: ``stock_bars_1m`` (init.sql:13-25), unique (symbol, bucket_start).
 STOCK_BARS_SCHEMA = StructType(

@@ -1,19 +1,13 @@
 from stockpulse_batch_realtime_etl_spark.sources.tables import (
     load_table,
     load_tables,
-    register_views,
 )
-from stockpulse_batch_realtime_etl_spark.sources.ticks import (
-    normalize_ticks,
-    ticks_from_events,
-)
+from stockpulse_batch_realtime_etl_spark.sources.ticks import ticks_from_events
 from stockpulse_batch_realtime_etl_spark.sources.dlq import split_raw_stream
 
 __all__ = [
     "load_table",
     "load_tables",
-    "register_views",
-    "normalize_ticks",
     "ticks_from_events",
     "split_raw_stream",
 ]

@@ -1,31 +1,20 @@
-"""Kafka source/sink builders (ops S2, S5, S11) — the reference's wire
-topology as Structured Streaming configuration.
+"""Kafka wire transformations (ops S2, S5): the reference's tick topic
+``stock.ticks.v1`` (keyed by symbol → per-symbol ordering, README.md:22,94;
+producer.py:87) as pure DataFrame functions.
 
-No broker exists in the test environment, so these builders are exercised
-two ways: the *transformations* (encode to key/value, decode from value)
-are pure DataFrame functions tested on batch data, and the reader/writer
-builders are constructed (not started) to pin their configuration.  Against
-a real cluster, ``spark-sql-kafka-0-10`` must be on the classpath and
-``bootstrap_servers`` set — everything else is identical.
-
-Reference parity:
-* topic ``stock.ticks.v1``, 3 partitions, keyed by symbol → per-symbol
-  ordering (README.md:22,94; producer.py:87)
-* consumer group semantics are subsumed by the checkpoint (consumer.py:111-117
-  at-least-once auto-commit upgrades to exactly-once bookkeeping)
-* ``startingOffsets=earliest`` (consumer.py:113)
-* the declared-but-unused bars topic ``stock.bars.1m.v1`` (README.md:95)
-  gets a real publisher here (op S11).
+No broker exists in the test environment, so the package builds no Kafka
+reader or writer; both transformations are tested on batch data.  A Kafka
+source (``spark-sql-kafka-0-10`` on the classpath, ``subscribe`` to the
+topic, ``startingOffsets=earliest`` as consumer.py:113) feeds
+:func:`kafka_value_to_raw`, whose output is what the one ingest path,
+sources/dlq.split_raw_stream, reads; the stream's checkpoint subsumes the
+consumer group's offsets (consumer.py:111-117).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-TICKS_TOPIC = "stock.ticks.v1"
-BARS_TOPIC = "stock.bars.1m.v1"
-
 
 #: Wire timestamp format: microsecond precision (the default SSS truncates
 #: to millis and would make the encode/decode round trip lossy).
@@ -53,18 +42,6 @@ def encode_ticks_for_kafka(ticks: DataFrame) -> DataFrame:
     )
 
 
-def kafka_tick_reader(spark, bootstrap_servers: str, topic: str = TICKS_TOPIC):
-    """S5: the consumer's subscription as a streaming reader builder.
-    Returns the DataStreamReader (caller ``.load()``s when a broker exists)."""
-    return (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("subscribe", topic)
-        .option("startingOffsets", "earliest")
-        .option("failOnDataLoss", "false")
-    )
-
-
 def kafka_value_to_raw(kafka_df: DataFrame) -> DataFrame:
     """Kafka records → the raw (value, topic, partition, offset) shape the
     DLQ split consumes (sources/dlq.py) — Kafka metadata columns map 1:1
@@ -74,20 +51,4 @@ def kafka_value_to_raw(kafka_df: DataFrame) -> DataFrame:
         F.col("topic"),
         F.col("partition").alias("partition"),
         F.col("offset").alias("offset"),
-    )
-
-
-def kafka_bar_writer(bars: DataFrame, bootstrap_servers: str, checkpoint: str):
-    """S11: publish bars to ``stock.bars.1m.v1`` — the topic the reference
-    declares but never uses.  Returns the DataStreamWriter (caller
-    ``.start()``s)."""
-    encoded = bars.select(
-        F.col("symbol").cast("string").alias("key"),
-        F.to_json(F.struct(*bars.columns)).alias("value"),
-    )
-    return (
-        encoded.writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("topic", BARS_TOPIC)
-        .option("checkpointLocation", checkpoint)
     )

@@ -105,15 +105,9 @@ def read_ticks(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    path: str,
-    key: str = "symbol",
-    buckets: int = 8,
-) -> None:
-    """Write ``df`` as a bucketed external table: hash-bucketed AND
-    sorted by ``key`` within each bucket file.
+def write_bucketed(df: DataFrame, table_name: str, path: str) -> None:
+    """Write ``df`` as a bucketed external table: hash-bucketed into 8
+    buckets AND sorted by ``symbol`` within each bucket file.
 
     Bucketing is the co-located-join layout: two tables bucketed by the
     same key into the same bucket count join WITHOUT any Exchange — each
@@ -126,22 +120,18 @@ def write_bucketed(
         df.write.mode("overwrite")
         .format("parquet")
         .option("path", path)
-        .bucketBy(buckets, key)
-        .sortBy(key)
+        .bucketBy(8, "symbol")
+        .sortBy("symbol")
         .saveAsTable(table_name)
     )
 
 
 def compact_partitioned(
-    spark: SparkSession,
-    src: str,
-    dst: str,
-    partition_col: str,
-    max_records_per_file: int = 5_000_000,
+    spark: SparkSession, src: str, dst: str, partition_col: str
 ) -> None:
     """Small-file compaction: rewrite the partitioned table at ``src`` into
-    the fresh path ``dst`` with one right-sized file set per partition
-    (one shuffle on the partition key, ``maxRecordsPerFile``), for tables
+    the fresh path ``dst`` with one right-sized file set per partition (one
+    shuffle on the partition key, at most 5M records per file), for tables
     that appending writers (a file sink, per-trigger appends) fill with
     small files.  The bars writer already writes one file per day.  The
     caller swaps ``dst`` in; the table being read is never overwritten.
@@ -150,7 +140,7 @@ def compact_partitioned(
     (
         df.repartition(F.col(partition_col))
         .write.mode("overwrite")
-        .option("maxRecordsPerFile", max_records_per_file)
+        .option("maxRecordsPerFile", 5_000_000)
         .partitionBy(partition_col)
         .parquet(dst)
     )

@@ -2,8 +2,7 @@
 
 Replaces the reference's JDBC/SQLAlchemy read path (services/api/app/db.py:10-19):
 tables become columnar Parquet scans with Catalyst predicate pushdown and
-column pruning, registered as temp views so every serving query can also run
-as ``spark.sql``.
+column pruning.
 
 Scale notes: ``spark.read.parquet`` on a directory of files is already the
 100 TB shape — file listing is distributed, row-group pruning applies, and
@@ -18,8 +17,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stockpulse_batch_realtime_etl_spark.schemas import TESTDATA_TABLES
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def _ensure_session_confs(spark: SparkSession) -> None:
@@ -74,7 +71,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def fan_out(df: DataFrame, min_factor: int = 2) -> DataFrame:
+def fan_out(df: DataFrame) -> DataFrame:
     """Round-robin repartition a NARROW scan up to cluster parallelism before
     a compute-heavy stage (shingle explode, per-token hashing, mapInPandas).
 
@@ -84,12 +81,13 @@ def fan_out(df: DataFrame, min_factor: int = 2) -> DataFrame:
     round-robin exchange of the (MB-scale) input buys full parallelism for
     the expensive stage.
 
-    Guarded: when the source already has ≥ parallelism/min_factor partitions
-    (the 100 TB case — real tables have thousands of row groups), this is a
-    no-op, so no gratuitous shuffle is ever added at scale.
+    Guarded: when the source already has > half the parallelism in
+    partitions (the 100 TB case — real tables have thousands of row
+    groups), this is a no-op, so no gratuitous shuffle is ever added at
+    scale.
     """
     target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() * min_factor <= target:
+    if df.rdd.getNumPartitions() * 2 <= target:
         return df.repartition(target)
     return df
 
@@ -135,13 +133,3 @@ def load_tables(
     spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TESTDATA_TABLES
 ) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in names}
-
-
-def register_views(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TESTDATA_TABLES
-) -> dict[str, DataFrame]:
-    """Register every driver table as a temp view (idempotent)."""
-    dfs = load_tables(spark, sf_dir, names)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs

@@ -1,15 +1,10 @@
-"""Tick-shaped sources and normalization.
+"""Tick corpus and oracle builders over the driver's ``events`` table.
 
-The reference has two producer shapes (SURVEY.md §1.2):
-
-* narrow ``{symbol, price, volume, event_time}`` (producer.py:66-74)
-* wide ``{symbol, open, high, low, close, volume, event_time, source}``
-  (producer_yfinance.py:100-109) — no ``price`` field; the reference consumer
-  dead-letters these on ``tick["price"]`` KeyError (consumer.py:82, 137-139).
-
-Design decision (SURVEY.md §1.2): we *normalize* instead —
-``price := coalesce(price, close)`` — and only dead-letter genuinely malformed
-records (sources/dlq.py).
+Raw records become ticks in ONE place, sources/dlq.split_raw_stream, which
+accepts both producer shapes (SURVEY.md §1.2).  This module builds what
+feeds and checks it: :func:`raw_json_corpus`, Kafka-shaped raw JSON for the
+split, and :func:`ticks_from_events`, already-typed ticks for the batch
+queries, each with the DuckDB fragment its oracle replays.
 
 For oracle-checked batch queries, the tick role is played by the driver's
 ``events`` table per FIXTURES.md §5:
@@ -30,7 +25,7 @@ event_time         ``ts``
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stockpulse_batch_realtime_etl_spark.sources.tables import fan_out, load_table
@@ -58,33 +53,6 @@ def ticks_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.col("event_id") % 15000 + 500)
         .alias("volume"),
         F.col("ts").alias("event_time"),
-    )
-
-
-def _norm_price() -> Column:
-    return F.coalesce(F.col("price"), F.col("close")).alias("price")
-
-
-def normalize_ticks(decoded: DataFrame) -> DataFrame:
-    """Normalize a union-decoded tick DataFrame (schemas.TICK_UNION_SCHEMA).
-
-    Accepts both producer shapes: ``price := coalesce(price, close)``, keeps
-    the extra OHLC/source columns, parses ISO-8601 ``event_time`` (F10) and
-    stamps ``created_at`` (init.sql:6).  Rows that remain invalid after
-    normalization (null symbol / price / event_time) belong in the DLQ —
-    the split lives in sources/dlq.py so the predicate is defined once.
-    """
-    return decoded.select(
-        F.upper(F.col("symbol")).alias("symbol"),
-        _norm_price(),
-        F.col("open"),
-        F.col("high"),
-        F.col("low"),
-        F.col("close"),
-        F.col("volume").cast("long").alias("volume"),
-        F.try_to_timestamp(F.col("event_time")).alias("event_time"),
-        F.col("source"),
-        F.current_timestamp().alias("created_at"),
     )
 
 

@@ -3,29 +3,30 @@
 The reference's producer (services/producer/producer_yfinance.py:63-157)
 polls ``yf.download`` for a wide per-symbol OHLCV frame and emits ticks of
 shape ``{symbol, open, high, low, close, volume, event_time, source}`` —
-no ``price`` field; downstream the engine treats ``price := close``
-(normalize_ticks, SURVEY.md §1.2).
+no ``price`` field.  The connector renders its rows as that wire JSON and
+takes the ticks of sources/dlq.split_raw_stream, the one ingest path, so
+``price := close`` and a row without a close or a parseable
+``event_time`` gives no tick, exactly as it would on the tick topic.
 
 Live network access is out of correctness scope, so the connector is
 driven by a RECORDED fixture replicating the yf.download row shape
 (cached mode ``source='yfinance'``, poll mode ``'yfinance_poll'``,
-producer_yfinance.py:100-109 / 139-147).  When the real library is
-importable the same code path accepts its frames — the seam is one
-function argument, not a fork.
+producer_yfinance.py:100-109 / 139-147).
 
 Scale note: a market-data poll is dimension-sized (symbols × minutes),
-so driver-side pandas → ``createDataFrame`` is the right shape; the big
-side is always the stored tick/bar tables this feed appends to.
+so a driver-side literal frame is the right shape; the big side is always
+the stored tick/bar tables this feed appends to.
 """
 
 from __future__ import annotations
 
+import json
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
-from stockpulse_batch_realtime_etl_spark.schemas import TICK_UNION_SCHEMA
-from stockpulse_batch_realtime_etl_spark.sources.ticks import normalize_ticks
+from stockpulse_batch_realtime_etl_spark.sources.dlq import split_raw_stream
+from stockpulse_batch_realtime_etl_spark.sources.tables import literal_df
 
 #: Recorded yf.download-shaped rows: one per (symbol, minute), wide OHLCV,
 #: ISO-8601 UTC event_time, no ``price`` key — exactly the wire shape the
@@ -52,17 +53,11 @@ YFINANCE_FIXTURE: list[dict[str, Any]] = [
 def yfinance_ticks(
     spark: SparkSession, rows: list[dict[str, Any]] | None = None
 ) -> DataFrame:
-    """Wide yfinance rows → normalized tick DataFrame (price := close).
+    """Wide yfinance rows → tick DataFrame (price := close).
 
-    ``rows=None`` uses the recorded fixture.  Output matches the stored
-    tick model: uppercased symbol, parsed timestamp, OHLC retained.
+    ``rows=None`` uses the recorded fixture.  Output is the split's tick
+    model: uppercased symbol, parsed timestamp, OHLC retained.
     """
     rows = YFINANCE_FIXTURE if rows is None else rows
-    wide = spark.createDataFrame(
-        [
-            tuple(r.get(f.name) for f in TICK_UNION_SCHEMA.fields)
-            for r in rows
-        ],
-        TICK_UNION_SCHEMA,
-    )
-    return normalize_ticks(wide)
+    raw = literal_df(spark, [(json.dumps(r),) for r in rows], "value string")
+    return split_raw_stream(raw).ticks

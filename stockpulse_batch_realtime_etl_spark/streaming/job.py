@@ -52,9 +52,9 @@ from stockpulse_batch_realtime_etl_spark.operators.ohlcv import (
     bar_agg_exprs,
     session_bars,
 )
+from stockpulse_batch_realtime_etl_spark.schemas import ETL_RUNS_SCHEMA
 from stockpulse_batch_realtime_etl_spark.sources import storage
 from stockpulse_batch_realtime_etl_spark.sources.dlq import split_raw_stream
-from stockpulse_batch_realtime_etl_spark.sources.tables import literal_df
 
 
 def raw_json_stream(
@@ -120,15 +120,18 @@ def _write_audit(
     spark: SparkSession, audit_path: str, n: int, started: float
 ) -> None:
     """Append one etl_runs audit row (aggregator.py:138-150 parity)."""
-    # literal_df, not createDataFrame: this runs once PER MICRO-BATCH
-    audit = literal_df(
-        spark,
-        [("aggregator", n, "complete")],
-        "source string, records_processed long, status string",
-    ).select(
-        "*",
-        F.lit(started).cast("timestamp").alias("started_at"),
-        F.current_timestamp().alias("completed_at"),
+    row = {
+        "source": F.lit("aggregator"),
+        "records_processed": F.lit(n),
+        "status": F.lit("complete"),
+        "started_at": F.lit(started),
+        "completed_at": F.current_timestamp(),
+    }
+    # a one-partition range, not createDataFrame: this runs once PER
+    # MICRO-BATCH, and the range stays in the JVM in one task (no Python-RDD
+    # parallelize tasks)
+    audit = spark.range(1, numPartitions=1).select(
+        *[row[f.name].cast(f.dataType).alias(f.name) for f in ETL_RUNS_SCHEMA]
     )
     audit.write.mode("append").parquet(audit_path)
 
@@ -251,39 +254,29 @@ def _ensure_corpus(
     return os.path.join(root, "{base,extra}")
 
 
-def _fixture_fingerprint(
-    sf_dir: str, tables: tuple[str, ...] = ("events",)
-) -> str:
-    """The repo's ONE fixture-identity fingerprint: canonical path + per
-    source parquet (mtime_ns, size) — so a REGENERATED fixture at the
+def _fixture_fingerprint(sf_dir: str) -> str:
+    """The repo's ONE fixture-identity fingerprint: canonical path + the
+    ``events`` parquet's (mtime_ns, size) — so a REGENERATED fixture at the
     same path invalidates any cache keyed on it instead of silently
     reusing stale files, and path spellings canonicalize.  Deliberately
     WITHOUT _CORPUS_VERSION, which versions the streaming corpus BUILDER,
     not fixture identity."""
     real = os.path.realpath(sf_dir)
-    parts = [real]
-    for name in tables:
-        p = os.path.join(real, f"{name}.parquet")
-        try:
-            st = os.stat(p)
-            parts.append(f"{name}:{st.st_mtime_ns}:{st.st_size}")
-        except OSError:
-            parts.append(f"{name}:missing")
-    return ":".join(parts)
+    try:
+        st = os.stat(os.path.join(real, "events.parquet"))
+        return f"{real}:events:{st.st_mtime_ns}:{st.st_size}"
+    except OSError:
+        return f"{real}:events:missing"
 
 
-def _corpus_tag(
-    sf_dir: str,
-    extra_key: str = "",
-    tables: tuple[str, ...] = ("events",),
-) -> str:
+def _corpus_tag(sf_dir: str, extra_key: str = "") -> str:
     """Cache key for materialized streaming corpora: builder code version
     + the shared fixture fingerprint."""
     import hashlib
 
     return hashlib.md5(
         f"{_CORPUS_VERSION}:{extra_key}:"
-        f"{_fixture_fingerprint(sf_dir, tables)}".encode()
+        f"{_fixture_fingerprint(sf_dir)}".encode()
     ).hexdigest()[:8]
 
 
@@ -895,16 +888,14 @@ def run_stream_stream_interval_join_available_now(
     spark: SparkSession,
     sf_dir: str,
     base_dir: str | None = None,
-    left_symbol: str = "PURCHASE",
-    right_symbol: str = "CLICK",
     attribution_minutes: int = 10,
     key_buckets: int = 10,
-    files_per_trigger: int = 30,
 ) -> DataFrame:
     """STREAM-STREAM INTERVAL join end-to-end — the attribution-join class
     (the one shape ``run_stream_stream_join_available_now`` cannot express):
-    each purchase joins the clicks of the SAME key whose click time falls
-    in ``[purchase_time − attribution_minutes, purchase_time]`` — a
+    each purchase (a ``PURCHASE`` tick) joins the clicks (``CLICK`` ticks)
+    of the SAME key whose click time falls in
+    ``[purchase_time − attribution_minutes, purchase_time]`` — a
     time-RANGE condition on the raw event times, not equal tumbling
     windows.  This is the canonical Structured Streaming ad-attribution
     pattern (equi-key + interval bounds), and it exercises the state-store
@@ -926,22 +917,15 @@ def run_stream_stream_interval_join_available_now(
     batch interval join the oracle runs, independent of batch boundaries.
 
     Batching: the corpus replays from the DAY-PARTITIONED corpus
-    (``_ensure_daily_corpus``) in event-time order, ``files_per_trigger``
-    day-files per micro-batch, so the watermark ADVANCES between batches
-    and join state is garbage-collected mid-run.  A single availableNow
-    mega-batch never moves the watermark — both entire sides sit in the
-    state store and every probe scans its whole key bucket, which the
-    round-8 scaling probe measured at 38× wall for 10× data (quadratic
-    per key); chunked replay is linear in replayed history, the honest
-    backfill cost.  ``files_per_trigger`` only sizes the replay chunk
-    (state ≤ chunk + horizon per key) — the emitted rows are identical at
-    any setting; 30 (a month per batch) amortizes micro-batch barrier
-    overhead at bench sfs (r15 measured 7.0 s at 7 files vs 4.6 s at 15;
-    the r16 warm-session sweep: 10.5 s at 15, 7.1 s at 30, 7.5 s at 45,
-    identical 5504 rows — batch barrier + state-commit overhead dominates
-    below ~30, per-key probe cost grows above it) while keeping per-key
-    state bounded at chunk+horizon instead of the whole history.  Late-drop safety: batches are whole days in order,
-    so no row can arrive behind a watermark derived from a LATER day.
+    (``_ensure_daily_corpus``) in event-time order, 30 day-files per
+    micro-batch, so the watermark ADVANCES between batches and join state
+    is garbage-collected mid-run.  A single availableNow mega-batch never
+    moves the watermark — both entire sides sit in the state store and
+    every probe scans its whole key bucket, which a scaling probe measured
+    at 38× wall for 10× data (quadratic per key); chunked replay is linear
+    in replayed history, the honest backfill cost.  Late-drop safety:
+    batches are whole days in order, so no row can arrive behind a
+    watermark derived from a LATER day.
 
     At 100 TB: both sides shuffle on the equi-key bucket; per-key state is
     bounded by (attribution horizon + watermark delay + replay chunk) ×
@@ -953,7 +937,7 @@ def run_stream_stream_interval_join_available_now(
         ticks = tick_stream_from_raw(raw)[0]
         key = F.pmod(F.floor("price").cast("long"), key_buckets)
         left = (
-            ticks.filter(F.col("symbol") == left_symbol)
+            ticks.filter(F.col("symbol") == "PURCHASE")
             .withWatermark("event_time", "2 minutes")
             .select(
                 key.alias("user_key"),
@@ -962,7 +946,7 @@ def run_stream_stream_interval_join_available_now(
             )
         )
         right = (
-            ticks.filter(F.col("symbol") == right_symbol)
+            ticks.filter(F.col("symbol") == "CLICK")
             .withWatermark("event_time", "2 minutes")
             .select(
                 key.alias("user_key2"),
@@ -994,7 +978,12 @@ def run_stream_stream_interval_join_available_now(
         base_dir,
         "ssjoin_iv",
         attributed,
-        days_per_batch=files_per_trigger,
+        # The chunk only sizes state (≤ chunk + horizon per key); the rows
+        # are identical at any setting.  30 days (a month) amortizes the
+        # micro-batch barrier + state-commit overhead that dominates below
+        # ~30, while per-key probe cost grows above it: a warm-session
+        # sweep gave 10.5 s at 15, 7.1 s at 30, 7.5 s at 45, same 5504 rows.
+        days_per_batch=30,
     )
     return spark.read.parquet(out_dir).select(
         "user_key",

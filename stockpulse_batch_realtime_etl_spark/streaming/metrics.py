@@ -95,9 +95,7 @@ def progress_df(spark: SparkSession, rows: list[dict[str, Any]]) -> DataFrame:
 
 
 def percentile_summary(
-    progress: DataFrame,
-    metric: str = "num_input_rows",
-    ps: tuple[float, ...] = (0.5, 0.95, 0.99),
+    progress: DataFrame, metric: str = "num_input_rows"
 ) -> DataFrame:
     """p50/p95/p99 (exact, interpolated) over one captured per-batch metric
     — the reference's Prometheus histogram summary (main.py:66-67) as a
@@ -112,7 +110,7 @@ def percentile_summary(
         F.round(
             F.percentile(F.col(metric).cast("double"), F.lit(p)), 4
         ).alias(f"p{int(p * 100)}")
-        for p in ps
+        for p in (0.5, 0.95, 0.99)
     ]
     return progress.filter(F.col(metric).isNotNull()).agg(
         F.lit(metric).alias("metric"),

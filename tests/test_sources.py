@@ -88,3 +88,22 @@ def test_yfinance_fixture_normalizes_wide_shape(spark):
         assert row.price == rec["close"]  # price := close
         assert row.open == rec["open"] and row.volume == rec["volume"]
         assert row.event_time is not None and row.created_at is not None
+
+
+def test_yfinance_rows_without_close_or_event_time_give_no_tick(spark):
+    """The connector keeps the ingest rule: the tick model's price and
+    event_time are NOT NULL, so such rows are not ticks."""
+    from stockpulse_batch_realtime_etl_spark.sources.yfinance_batch import (
+        YFINANCE_FIXTURE,
+        yfinance_ticks,
+    )
+
+    good = YFINANCE_FIXTURE[0]
+    rows = [
+        good,
+        {**good, "symbol": "NOCLOSE", "close": None},
+        {**good, "symbol": "BADTIME", "event_time": "not-a-time"},
+    ]
+    out = yfinance_ticks(spark, rows).collect()
+    assert [r.symbol for r in out] == ["AAPL"]
+    assert out[0].price == good["close"] and out[0].event_time is not None

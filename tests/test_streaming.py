@@ -172,6 +172,22 @@ def test_upsert_writes_audit_row(spark, tmp_path):
     assert row.completed_at >= row.started_at
 
 
+def test_audit_row_is_typed_by_etl_runs_schema(spark, tmp_path):
+    import time
+
+    from stockpulse_batch_realtime_etl_spark.schemas import ETL_RUNS_SCHEMA
+
+    audit = str(tmp_path / "audit")
+    job._write_audit(spark, audit, 3, time.time())
+    out = spark.read.parquet(audit)
+    assert [(f.name, f.dataType) for f in out.schema] == [
+        (f.name, f.dataType) for f in ETL_RUNS_SCHEMA
+    ]
+    (row,) = out.collect()
+    assert (row.source, row.records_processed, row.status) == (
+        "aggregator", 3, "complete")
+
+
 def _bars(spark, rows):
     """Bars frame from ``(symbol, "YYYY-MM-DD HH:MM", close)`` rows."""
     import datetime as dt
