@@ -32,17 +32,22 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-#: Aggregate expressions shared by the batch and streaming bar paths.
+#: Bar column ← its aggregate over ticks, shared by the batch and streaming
+#: bar paths.  SQL text: ``F.expr`` takes 3 py4j round trips,
+#: ``F.max(F.col(...)).alias`` 27 (each Column call records its call site).
+_BAR_AGGS = {
+    "open": "min_by(price, event_time)",
+    "high": "max(price)",
+    "low": "min(price)",
+    "close": "max_by(price, event_time)",
+    "volume_sum": "sum(coalesce(volume, 0))",
+    "tick_count": "count(1)",
+}
+BAR_COLUMNS = tuple(_BAR_AGGS)
+
+
 def bar_agg_exprs() -> list[Column]:
-    price, event_time = F.col("price"), F.col("event_time")
-    return [
-        F.min_by(price, event_time).alias("open"),
-        F.max(price).alias("high"),
-        F.min(price).alias("low"),
-        F.max_by(price, event_time).alias("close"),
-        F.sum(F.coalesce(F.col("volume"), F.lit(0))).alias("volume_sum"),
-        F.count(F.lit(1)).alias("tick_count"),
-    ]
+    return [F.expr(f"{e} AS {name}") for name, e in _BAR_AGGS.items()]
 
 
 def ohlcv_bars(
@@ -58,8 +63,7 @@ def ohlcv_bars(
     """
     unit = {"1 minute": "minute", "1 hour": "hour", "1 day": "day"}[bucket]
     return ticks.groupBy(
-        F.col("symbol"),
-        F.date_trunc(unit, F.col("event_time")).alias("bucket_start"),
+        "symbol", F.expr(f"date_trunc('{unit}', event_time) AS bucket_start")
     ).agg(*bar_agg_exprs())
 
 
@@ -93,33 +97,20 @@ def sliding_bars(
     done relationally.
     """
     if length_minutes % slide_minutes != 0:
-        w = F.window(
-            "event_time", f"{length_minutes} minutes", f"{slide_minutes} minutes"
-        )
+        w = f"window(event_time, '{length_minutes} minutes', '{slide_minutes} minutes')"
         return (
-            ticks.groupBy(F.col("symbol"), w.alias("w"))
+            ticks.groupBy("symbol", F.expr(f"{w} AS w"))
             .agg(*bar_agg_exprs())
-            .select(
-                "symbol",
-                F.col("w.start").alias("window_start"),
-                F.col("w.end").alias("window_end"),
-                "open",
-                "high",
-                "low",
-                "close",
-                "volume_sum",
-                "tick_count",
+            .selectExpr(
+                "symbol", "w.start AS window_start", "w.end AS window_end", *BAR_COLUMNS
             )
         )
     k = length_minutes // slide_minutes
+    pane = f"window(event_time, '{slide_minutes} minutes') AS p"
     panes = (
-        ticks.groupBy(
-            F.col("symbol"),
-            F.window("event_time", f"{slide_minutes} minutes").alias("p"),
-        )
+        ticks.groupBy("symbol", F.expr(pane))
         .agg(*bar_agg_exprs())
-        .select("symbol", F.col("p.start").alias("pane_start"), "open",
-                "high", "low", "close", "volume_sum", "tick_count")
+        .selectExpr("symbol", "p.start AS pane_start", *BAR_COLUMNS)
     )
     exploded = panes.select(
         "*", F.explode(F.sequence(F.lit(0), F.lit(k - 1))).alias("j")
@@ -138,19 +129,11 @@ def sliding_bars(
             F.sum("volume_sum").alias("volume_sum"),
             F.sum("tick_count").alias("tick_count"),
         )
-        .select(
+        .selectExpr(
             "symbol",
             "window_start",
-            (
-                F.col("window_start")
-                + F.expr(f"INTERVAL {length_minutes} MINUTES")
-            ).alias("window_end"),
-            "open",
-            "high",
-            "low",
-            "close",
-            "volume_sum",
-            "tick_count",
+            f"window_start + INTERVAL {length_minutes} MINUTES AS window_end",
+            *BAR_COLUMNS,
         )
     )
 
@@ -165,22 +148,11 @@ def session_bars(ticks: DataFrame, gap: int | str = 5) -> DataFrame:
     gaps-and-islands SQL (lag + cumulative sum of gap-breaks), proving the
     semantics match the relational definition exactly.
     """
-    w = F.session_window(
-        "event_time", gap if isinstance(gap, str) else f"{gap} minutes"
-    )
+    gap = gap if isinstance(gap, str) else f"{gap} minutes"
     return (
-        ticks.groupBy(F.col("symbol"), w.alias("w"))
+        ticks.groupBy("symbol", F.expr(f"session_window(event_time, '{gap}') AS w"))
         .agg(*bar_agg_exprs())
-        .select(
-            "symbol",
-            F.col("w.start").alias("session_start"),
-            "open",
-            "high",
-            "low",
-            "close",
-            "volume_sum",
-            "tick_count",
-        )
+        .selectExpr("symbol", "w.start AS session_start", *BAR_COLUMNS)
     )
 
 

@@ -86,6 +86,17 @@ ETL_RUNS_SCHEMA = StructType(
     ]
 )
 
+
+def typed_columns(schema: StructType, exprs: dict[str, str] | None = None) -> list[str]:
+    """SQL select list for ``schema``: each field is ``exprs[name]`` (default:
+    the column of that name) cast to the field's type, under its name."""
+    return [
+        f"CAST({(exprs or {}).get(f.name, f.name)} AS {f.dataType.simpleString()})"
+        f" AS {f.name}"
+        for f in schema
+    ]
+
+
 # --- extension tables (multimodal plumbing) ---------------------------------
 
 #: Multimodal asset row: the payload is an opaque binary column plus typed

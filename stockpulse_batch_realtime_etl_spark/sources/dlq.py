@@ -19,13 +19,13 @@ from __future__ import annotations
 
 from typing import NamedTuple
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.types import StringType, StructField, StructType
 
 from stockpulse_batch_realtime_etl_spark.schemas import (
     FAILED_EVENTS_SCHEMA,
     TICK_UNION_SCHEMA,
+    typed_columns,
 )
 
 
@@ -34,36 +34,39 @@ class SplitStreams(NamedTuple):
     failed: DataFrame
 
 
-#: Decode schema = tick union + corrupt-record capture.  In PERMISSIVE mode
-#: from_json never yields a null struct — malformed input produces an
+#: Decode schema (DDL) = tick union + corrupt-record capture.  In PERMISSIVE
+#: mode from_json never yields a null struct — malformed input produces an
 #: all-null row — so distinguishing "malformed JSON" from "valid JSON
 #: missing keys" requires columnNameOfCorruptRecord.
 _DECODE_SCHEMA = StructType(
     list(TICK_UNION_SCHEMA.fields) + [StructField("_corrupt", StringType())]
-)
+).simpleString()
 
 #: DLQ column ← Kafka metadata column; the text source has only ``value``,
 #: so an absent column becomes null (the DLQ DDL's columns are nullable).
 _KAFKA_META = {"topic": "topic", "partition_id": "partition", "offset_id": "offset"}
 
 
-def _price(t: Column) -> Column:
-    return F.coalesce(t["price"], t["close"])
+def _price(t: str) -> str:
+    return f"coalesce({t}.price, {t}.close)"
 
 
-def _event_time(t: Column) -> Column:
+def _event_time(t: str) -> str:
     """ISO-8601 → timestamp (F10, producer.py:73); null when unparseable."""
-    return F.try_to_timestamp(t["event_time"])
+    return f"try_to_timestamp({t}.event_time)"
 
 
-def _error_message(t: Column, event_time: Column) -> Column:
-    """THE raw-tick contract: the first check ``t`` fails, worded like the
-    reference's exception text (consumer.py:137-139), or null for a tick."""
+def _error_message(t: str, event_time: str) -> str:
+    """THE raw-tick contract: the first check the decoded struct ``t`` fails,
+    worded like the reference's exception text (consumer.py:137-139), or
+    null for a tick.  SQL text, like every expression of the split: each
+    plan is built from a few strings instead of a py4j round trip per
+    Column call."""
     return (
-        F.when(t["_corrupt"].isNotNull(), F.lit("JSONDecodeError: malformed record"))
-        .when(t["symbol"].isNull(), F.lit("KeyError: 'symbol'"))
-        .when(_price(t).isNull(), F.lit("KeyError: 'price'"))
-        .when(event_time.isNull(), F.lit("ValueError: unparseable event_time"))
+        f"CASE WHEN {t}._corrupt IS NOT NULL THEN 'JSONDecodeError: malformed record'"
+        f" WHEN {t}.symbol IS NULL THEN 'KeyError: \\'symbol\\''"
+        f" WHEN {_price(t)} IS NULL THEN 'KeyError: \\'price\\''"
+        f" WHEN {event_time} IS NULL THEN 'ValueError: unparseable event_time' END"
     )
 
 
@@ -74,15 +77,11 @@ def split_raw_stream(raw: DataFrame) -> SplitStreams:
     column ``value``; Kafka's ``topic``/``partition``/``offset`` columns pass
     through to the DLQ rows when present.
     """
-    decoded = raw.withColumn(
-        "_tick",
-        F.from_json(
-            F.col("value").cast("string"),
-            _DECODE_SCHEMA,
-            {"columnNameOfCorruptRecord": "_corrupt"},
-        ),
+    decoded = raw.selectExpr(
+        "*",
+        f"from_json(CAST(value AS STRING), '{_DECODE_SCHEMA}', "
+        "map('columnNameOfCorruptRecord', '_corrupt')) AS _tick",
     )
-    tick = F.col("_tick")
     # Filtering ``decoded`` directly lets the optimizer inline from_json into
     # the filter and parse every valid record twice.  A one-element explode
     # is a generator it cannot push the filter through: one JSON parse and
@@ -90,33 +89,32 @@ def split_raw_stream(raw: DataFrame) -> SplitStreams:
     # projection (windowed bars over the decoded stream −30% on a 4-core
     # host).  The DLQ side stays without it: there it made a 120k-record
     # DLQ write ~25% slower.
-    parsed = decoded.select(
-        F.explode(F.array(F.struct(
-            tick.alias("t"), _event_time(tick).alias("event_time")
-        ))).alias("_p")
+    parsed = decoded.selectExpr(
+        f"explode(array(struct(_tick AS t, {_event_time('_tick')} AS event_time))) AS _p"
     )
-    t, event_time = F.col("_p.t"), F.col("_p.event_time")
-    ticks = parsed.filter(_error_message(t, event_time).isNull()).select(
-        F.upper(t["symbol"]).alias("symbol"),
-        _price(t).alias("price"),
-        *[t[c].alias(c) for c in ("open", "high", "low", "close", "volume")],
-        event_time.alias("event_time"),
-        t["source"].alias("source"),
-        F.current_timestamp().alias("created_at"),
+    ticks = parsed.filter(
+        f"({_error_message('_p.t', '_p.event_time')}) IS NULL"
+    ).selectExpr(
+        "upper(_p.t.symbol) AS symbol",
+        f"{_price('_p.t')} AS price",
+        *[f"_p.t.{c} AS {c}" for c in ("open", "high", "low", "close", "volume")],
+        "_p.event_time AS event_time",
+        "_p.t.source AS source",
+        "current_timestamp() AS created_at",
     )
 
-    error = _error_message(tick, _event_time(tick))
+    error = _error_message("_tick", _event_time("_tick"))
     row = {
-        "source": F.lit("consumer"),
+        "source": "'consumer'",
         **{
-            name: F.col(c) if c in raw.columns else F.lit(None)
+            name: f"`{c}`" if c in raw.columns else "NULL"
             for name, c in _KAFKA_META.items()
         },
-        "raw_value": F.col("value"),
+        "raw_value": "value",
         "error_message": error,
-        "failed_at": F.current_timestamp(),
+        "failed_at": "current_timestamp()",
     }
-    failed = decoded.filter(error.isNotNull()).select(
-        *[row[f.name].cast(f.dataType).alias(f.name) for f in FAILED_EVENTS_SCHEMA]
+    failed = decoded.filter(f"({error}) IS NOT NULL").selectExpr(
+        *typed_columns(FAILED_EVENTS_SCHEMA, row)
     )
     return SplitStreams(ticks=ticks, failed=failed)

@@ -26,7 +26,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from stockpulse_batch_realtime_etl_spark.schemas import STOCK_BARS_SCHEMA
+from stockpulse_batch_realtime_etl_spark.schemas import STOCK_BARS_SCHEMA, typed_columns
 
 
 def write_ticks_partitioned(ticks: DataFrame, path: str) -> None:
@@ -53,13 +53,14 @@ def _write_bars(bars: DataFrame, path: str, dynamic: bool) -> int:
     caller writes the same types.  ``dynamic`` replaces only the days in
     ``bars``, else the whole table.  Returns the rows written, observed
     above the shuffle (below it, AQE drops an empty shuffle's metrics)."""
-    columns = [F.col(f.name).cast(f.dataType) for f in STOCK_BARS_SCHEMA]
     written = Observation()
     (
-        bars.select(*columns, F.to_date("bucket_start").alias("bucket_date"))
+        bars.selectExpr(
+            *typed_columns(STOCK_BARS_SCHEMA), "to_date(bucket_start) AS bucket_date"
+        )
         .repartition("bucket_date")
         .sortWithinPartitions("bucket_date", *BARS_KEY)
-        .observe(written, F.count(F.lit(1)).alias("n"))
+        .observe(written, F.expr("count(1) AS n"))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic" if dynamic else "static")
         .partitionBy("bucket_date")
@@ -81,11 +82,17 @@ def upsert_bars(batch: DataFrame, path: str) -> int:
     Later ones persist the batch for its three reads: one collect gives the
     row count and the days, which the table read takes as a static
     partition filter (a join on ``bucket_date`` gets no dynamic pruning)."""
-    # try-scope is EXACTLY the table read: a wider scope would take any
-    # later analysis error (e.g. from a stray file) as a first write
+    spark = batch.sparkSession
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
+    # a missing table costs one Hadoop ``exists``; a read that raises costs
+    # hundreds of py4j round trips.  try-scope is EXACTLY the table read: a
+    # wider scope would take any later analysis error as a first write
     try:
-        table = batch.sparkSession.read.parquet(path)
-    except AnalysisException:  # no table yet, or only an empty write
+        table = spark.read.parquet(path) if fs.exists(hpath) else None
+    except AnalysisException:  # a directory with no data files yet
+        table = None
+    if table is None:
         return _write_bars(batch, path, dynamic=True)
     batch.persist()
     try:

@@ -126,7 +126,7 @@ def literal_df(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame
         )
         for row in rows
     ]
-    return spark.range(1).select(F.inline(F.array(*structs)))
+    return spark.range(1, numPartitions=1).select(F.inline(F.array(*structs)))
 
 
 def load_tables(

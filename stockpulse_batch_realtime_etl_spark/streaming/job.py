@@ -35,6 +35,14 @@ and restores the session conf.  All streaming state — windows, dedup keys,
 join buffers, the custom running bar — is watermark- or corpus-bounded, so
 it lives in the one state-store provider ``session.default_conf`` sets:
 the in-memory, checkpointed HDFS-backed store.
+
+A replay's fixed cost, not its rows, dominates: a bounded bars replay is
+one micro-batch of three stages (decode + partial aggregate, stateful
+aggregate, day-shuffled write).  Its split, bars query and sink take
+250–350 py4j round trips, as SQL text (a classic PySpark Column call adds
+~4 to record its call site: ~1,900 as Columns).  Checkpoints fork no
+``readlink`` (``session.default_conf``); 86 ``chmod`` forks remain, one per
+file or directory created without libhadoop.  Planning takes the rest.
 """
 
 from __future__ import annotations
@@ -49,10 +57,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from stockpulse_batch_realtime_etl_spark.operators.ohlcv import (
+    BAR_COLUMNS,
     bar_agg_exprs,
     session_bars,
 )
-from stockpulse_batch_realtime_etl_spark.schemas import ETL_RUNS_SCHEMA
+from stockpulse_batch_realtime_etl_spark.schemas import ETL_RUNS_SCHEMA, typed_columns
 from stockpulse_batch_realtime_etl_spark.sources import storage
 from stockpulse_batch_realtime_etl_spark.sources.dlq import split_raw_stream
 
@@ -87,21 +96,9 @@ def windowed_bars(ticks: DataFrame, watermark: str = "2 minutes") -> DataFrame:
     operators/ohlcv.ohlcv_bars — same aggregate expression list)."""
     return (
         ticks.withWatermark("event_time", watermark)
-        .groupBy(
-            F.col("symbol"),
-            F.window("event_time", "1 minute").alias("w"),
-        )
+        .groupBy("symbol", F.expr("window(event_time, '1 minute') AS w"))
         .agg(*bar_agg_exprs())
-        .select(
-            "symbol",
-            F.col("w.start").alias("bucket_start"),
-            "open",
-            "high",
-            "low",
-            "close",
-            "volume_sum",
-            "tick_count",
-        )
+        .selectExpr("symbol", "w.start AS bucket_start", *BAR_COLUMNS)
     )
 
 
@@ -121,17 +118,17 @@ def _write_audit(
 ) -> None:
     """Append one etl_runs audit row (aggregator.py:138-150 parity)."""
     row = {
-        "source": F.lit("aggregator"),
-        "records_processed": F.lit(n),
-        "status": F.lit("complete"),
-        "started_at": F.lit(started),
-        "completed_at": F.current_timestamp(),
+        "source": "'aggregator'",
+        "records_processed": str(n),
+        "status": "'complete'",
+        "started_at": f"{started!r}D",
+        "completed_at": "current_timestamp()",
     }
     # a one-partition range, not createDataFrame: this runs once PER
     # MICRO-BATCH, and the range stays in the JVM in one task (no Python-RDD
-    # parallelize tasks)
-    audit = spark.range(1, numPartitions=1).select(
-        *[row[f.name].cast(f.dataType).alias(f.name) for f in ETL_RUNS_SCHEMA]
+    # parallelize tasks); one selectExpr, not a py4j round trip per Column call
+    audit = spark.range(1, numPartitions=1).selectExpr(
+        *typed_columns(ETL_RUNS_SCHEMA, row)
     )
     audit.write.mode("append").parquet(audit_path)
 

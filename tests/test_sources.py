@@ -107,3 +107,12 @@ def test_yfinance_rows_without_close_or_event_time_give_no_tick(spark):
     out = yfinance_ticks(spark, rows).collect()
     assert [r.symbol for r in out] == ["AAPL"]
     assert out[0].price == good["close"] and out[0].event_time is not None
+
+
+def test_literal_df_is_one_partition(spark):
+    """An action over a literal frame schedules one task, not one per core."""
+    from stockpulse_batch_realtime_etl_spark.sources.tables import literal_df
+
+    df = literal_df(spark, [(1, "a"), (2, "b")], "id long, s string")
+    assert df.rdd.getNumPartitions() == 1
+    assert df.count() == 2

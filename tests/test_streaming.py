@@ -396,6 +396,46 @@ def test_bounded_bars_skip_trailing_no_data_batch(spark, tmp_path):
     assert [p["numInputRows"] for p in q.recentProgress] == [6]
 
 
+def test_stream_build_stays_within_py4j_budget(spark, tmp_path, monkeypatch):
+    """Building the bars stream (source, tick/DLQ split, windowed bars,
+    foreachBatch writer) is a fixed cost of every replay.  Built from SQL
+    text it takes ~125 py4j round trips; built from Columns, which record
+    their call site on every call, the split alone took ~1,000."""
+    from py4j.clientserver import ClientServerConnection
+
+    calls = []
+    send = ClientServerConnection.send_command
+
+    def counted(self, command):
+        calls.append(command)
+        return send(self, command)
+
+    (tmp_path / "src").mkdir()
+    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
+    ticks, _ = job.tick_stream_from_raw(
+        job.raw_json_stream(spark, str(tmp_path / "src")))
+    (
+        job.windowed_bars(ticks).writeStream.outputMode("update")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .foreachBatch(lambda b, _: job.upsert_bars_batch(b, str(tmp_path / "bars")))
+    )
+    monkeypatch.undo()
+    assert 0 < len(calls) <= 200, len(calls)
+
+
+def test_stream_checkpoints_use_the_filesystem_manager(spark, tmp_path):
+    """Streaming checkpoints are written through ``FileSystem.rename``: the
+    default FileContext manager forks ``readlink`` for every renamed path
+    when libhadoop is not loaded."""
+    jvm = spark._jvm
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing \
+        .CheckpointFileManager.create(
+            jvm.org.apache.hadoop.fs.Path(str(tmp_path)),
+            spark._jsparkSession.sessionState().newHadoopConf(),
+        )
+    assert manager.getClass().getSimpleName() == "FileSystemBasedCheckpointFileManager"
+
+
 def test_sector_rollup_unpersists_dim_when_setup_fails(spark, monkeypatch):
     """The cached sector dimension is released even when the run fails
     before its stream starts (here: while building the corpus)."""
