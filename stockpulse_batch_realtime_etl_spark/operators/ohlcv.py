@@ -20,10 +20,18 @@ Tie behavior on equal event_time is nondeterministic in BOTH systems (the
 reference's array_agg ordering is equally unstable on ties — SURVEY.md §7);
 fixtures keep timestamps unique within a group.
 
-The same aggregate-expression list serves the batch path (this module) and
-the streaming path (streaming/job.py groups by ``window(event_time, "1
-minute")`` instead of ``date_trunc`` — identical semantics for tumbling 1-min
-windows, SURVEY.md op F1).
+This module is the only code that knows how a bar is computed.  Two SQL
+maps hold the whole algebra:
+
+* ``_BAR_AGGS`` — tick → bar: the aggregate above over raw ticks.  It serves
+  the batch bars, the streaming bars (streaming/job.py groups by
+  ``window(event_time, "1 minute")`` instead of ``date_trunc`` — identical
+  semantics for tumbling 1-min windows, SURVEY.md op F1), the running bar
+  (streaming/stateful.py) and the sliding/session windows.
+* ``_BAR_MERGE`` — bar → bar: OHLCV is mergeable, so finer bars combine
+  into a coarser one by open/close of the earliest/latest bar, extrema of
+  extrema and sums of sums.  It serves the sliding-window pane merge, the
+  rollup cascade and the serving summaries (operators/serving.py).
 """
 
 from __future__ import annotations
@@ -45,9 +53,28 @@ _BAR_AGGS = {
 }
 BAR_COLUMNS = tuple(_BAR_AGGS)
 
+#: Bar column ← its merge over finer bars keyed by the time column ``{t}``.
+_BAR_MERGE = {
+    "open": "min_by(open, {t})",
+    "high": "max(high)",
+    "low": "min(low)",
+    "close": "max_by(close, {t})",
+    "volume_sum": "sum(volume_sum)",
+    "tick_count": "sum(tick_count)",
+}
+
 
 def bar_agg_exprs() -> list[Column]:
     return [F.expr(f"{e} AS {name}") for name, e in _BAR_AGGS.items()]
+
+
+def bar_merge_exprs(time_col: str, *names: str) -> list[Column]:
+    """Merge aggregates of finer bars keyed by ``time_col``: all bar columns,
+    or only ``names`` in the order given."""
+    return [
+        F.expr(f"{_BAR_MERGE[name].format(t=time_col)} AS {name}")
+        for name in names or BAR_COLUMNS
+    ]
 
 
 def ohlcv_bars(
@@ -121,14 +148,7 @@ def sliding_bars(
     )
     return (
         exploded.groupBy("symbol", "window_start")
-        .agg(
-            F.min_by("open", "pane_start").alias("open"),
-            F.max("high").alias("high"),
-            F.min("low").alias("low"),
-            F.max_by("close", "pane_start").alias("close"),
-            F.sum("volume_sum").alias("volume_sum"),
-            F.sum("tick_count").alias("tick_count"),
-        )
+        .agg(*bar_merge_exprs("pane_start"))
         .selectExpr(
             "symbol",
             "window_start",
@@ -167,20 +187,9 @@ def rollup_bars(bars: DataFrame, unit: str = "hour") -> DataFrame:
     bar table and re-scanning the tick firehose.  Same single hash-aggregate
     plan shape as the flagship, keyed by the coarser bucket.
     """
-    return (
-        bars.groupBy(
-            F.col("symbol"),
-            F.date_trunc(unit, F.col("bucket_start")).alias("bucket_start"),
-        )
-        .agg(
-            F.min_by(F.col("open"), F.col("bucket_start")).alias("open"),
-            F.max(F.col("high")).alias("high"),
-            F.min(F.col("low")).alias("low"),
-            F.max_by(F.col("close"), F.col("bucket_start")).alias("close"),
-            F.sum(F.col("volume_sum")).alias("volume_sum"),
-            F.sum(F.col("tick_count")).alias("tick_count"),
-        )
-    )
+    return bars.groupBy(
+        "symbol", F.expr(f"date_trunc('{unit}', bucket_start) AS bucket_start")
+    ).agg(*bar_merge_exprs("bucket_start"))
 
 
 def gapfill_bars(

@@ -47,6 +47,10 @@ from stockpulse_batch_realtime_etl_spark.functions.scalars import (
     null_safe_volume,
     round4,
 )
+from stockpulse_batch_realtime_etl_spark.operators.ohlcv import (
+    BAR_COLUMNS,
+    bar_merge_exprs,
+)
 
 
 def validate_symbol(symbol: str) -> str:
@@ -139,16 +143,7 @@ def latest_bars(bars: DataFrame, symbol: str, limit: int = 100) -> DataFrame:
     limit = max(1, min(int(limit), 1440))  # Query bound bars.py:25
     return (
         bars.filter(F.col("symbol") == validate_symbol(symbol))
-        .select(
-            "symbol",
-            "bucket_start",
-            "open",
-            "high",
-            "low",
-            "close",
-            "volume_sum",
-            "tick_count",
-        )
+        .select("symbol", "bucket_start", *BAR_COLUMNS)
         .orderBy(F.col("bucket_start").desc())
         .limit(limit)
     )
@@ -169,12 +164,7 @@ def bar_summary(bars: DataFrame, symbol: str, minutes: int = 180) -> DataFrame:
     )
     agg = b.groupBy("symbol").agg(
         F.count(F.lit(1)).alias("bar_count"),
-        F.min_by("open", "bucket_start").alias("open"),
-        F.max("high").alias("high"),
-        F.min("low").alias("low"),
-        F.max_by("close", "bucket_start").alias("close"),
-        F.sum("volume_sum").alias("volume_sum"),
-        F.sum("tick_count").alias("tick_count"),
+        *bar_merge_exprs("bucket_start"),
         F.min("bucket_start").alias("first_bucket"),
         F.max("bucket_start").alias("last_bucket"),
     )
@@ -196,8 +186,7 @@ def movers(bars: DataFrame, minutes: int = 180, limit: int = 20) -> DataFrame:
     minutes = max(1, min(int(minutes), 1440))
     b = _window_filter(bars, "bucket_start", minutes)
     per_symbol = b.groupBy("symbol").agg(
-        F.min_by("open", "bucket_start").alias("open"),
-        F.max_by("close", "bucket_start").alias("close"),
+        *bar_merge_exprs("bucket_start", "open", "close")
     )
     return (
         per_symbol.withColumn(

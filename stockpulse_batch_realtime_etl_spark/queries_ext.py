@@ -2787,9 +2787,9 @@ GROUP BY symbol
 """,
 )
 def q_streaming_running_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom stateful operator (applyInPandasWithState) end-to-end: the
+    """Running bar (a window-less streaming aggregate) end-to-end: the
     final per-symbol running OHLCV must equal the batch GROUP BY over the
-    decoded wire corpus — state folding is exact under any batch split."""
+    decoded wire corpus — the state is exact under any batch split."""
     from stockpulse_batch_realtime_etl_spark.streaming.job import (
         run_running_bars_available_now,
     )

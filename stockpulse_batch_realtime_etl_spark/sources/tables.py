@@ -11,12 +11,11 @@ nothing here collects to the driver.
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from stockpulse_batch_realtime_etl_spark.schemas import TESTDATA_TABLES
 
 
 def _ensure_session_confs(spark: SparkSession) -> None:
@@ -99,37 +98,24 @@ def literal_df(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame
     ``sc.parallelize`` with defaultParallelism slices, so EVERY downstream
     action evaluates ~core-count pickled Python-worker tasks for a handful
     of rows — measured at 45 executor-seconds (1.4 s/task × 32) for a
-    3-row table.  Building the same
-    rows as a literal array-of-structs inlined over ``range(1)`` stays
-    entirely in the JVM: one task, no Python workers, no shuffle.
+    3-row table.  Here the rows travel as ONE JSON string literal, parsed
+    by ``from_json`` into an array of structs and inlined over a
+    one-partition ``range(1)``: one task, no Python workers, no shuffle,
+    and a constant number of py4j round trips (a Column per cell would
+    cost ~40 per cell, each Column call recording its call site).
+    ``FAILFAST``: a value that does not parse as its field's type raises
+    instead of becoming null.  Fields come back nullable.
 
-    For dimension-table-sized literals only (the plan carries one literal
-    per cell); bulk local data should go through Arrow ``createDataFrame``
-    (a pandas payload) instead.
+    For dimension-table-sized literals only (the plan carries the whole
+    JSON text); bulk local data should go through Arrow
+    ``createDataFrame`` (a pandas payload) instead.
     """
-    from pyspark.sql.types import _parse_datatype_string
+    from pyspark.sql.types import ArrayType, _parse_datatype_string
 
-    fields = _parse_datatype_string(schema).fields
-    if not rows:
-        return spark.range(0).select(
-            *[
-                F.lit(None).cast(f.dataType).alias(f.name)
-                for f in fields
-            ]
+    struct = _parse_datatype_string(schema)
+    payload = json.dumps([dict(zip(struct.names, row)) for row in rows])
+    return spark.range(1, numPartitions=1).select(
+        F.inline(
+            F.from_json(F.lit(payload), ArrayType(struct), {"mode": "FAILFAST"})
         )
-    structs = [
-        F.struct(
-            *[
-                F.lit(v).cast(f.dataType).alias(f.name)
-                for v, f in zip(row, fields)
-            ]
-        )
-        for row in rows
-    ]
-    return spark.range(1, numPartitions=1).select(F.inline(F.array(*structs)))
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TESTDATA_TABLES
-) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in names}
+    )

@@ -32,7 +32,7 @@ Bounded runs: every ``run_*`` function below is one stream definition
 handed to :func:`_run_bounded`, which wipes its directories, builds the
 corpus, runs it once with ``availableNow`` into a ``foreachBatch`` writer
 and restores the session conf.  All streaming state — windows, dedup keys,
-join buffers, the custom running bar — is watermark- or corpus-bounded, so
+join buffers, the running bar — is watermark- or corpus-bounded, so
 it lives in the one state-store provider ``session.default_conf`` sets:
 the in-memory, checkpointed HDFS-backed store.
 
@@ -567,17 +567,17 @@ def run_session_bars_available_now(
 def run_running_bars_available_now(
     spark: SparkSession, sf_dir: str, base_dir: str | None = None
 ) -> DataFrame:
-    """Bounded run of a custom stateful operator: stream the wire corpus,
-    fold per-symbol running OHLCV state across micro-batches
-    (``streaming.stateful.running_bars``, applyInPandasWithState), and
-    return the FINAL running bar per symbol.
+    """Bounded run of the running bar: stream the wire corpus, carry
+    per-symbol running OHLCV state across micro-batches
+    (``streaming.stateful.running_bars``, a window-less streaming
+    aggregate), and return the FINAL running bar per symbol.
 
     Update-mode emission yields one row per active symbol per batch; the
     final answer is the row with the highest tick_count per symbol
     (monotone in batch order, so "latest" needs no batch-id bookkeeping).
-    Every state field is exact under any batch split — argmin/argmax by
-    event_time, integer sums, min/max — so the result provably equals the
-    batch GROUP BY over the same ticks, which is what the oracle checks.
+    Every aggregate is exact under any batch split — min_by/max_by on
+    event_time, integer sums, min/max — so the result equals the batch
+    GROUP BY over the same ticks, which is what the oracle checks.
     """
     from stockpulse_batch_realtime_etl_spark.streaming.stateful import (
         running_bars,

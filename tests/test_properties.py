@@ -915,3 +915,71 @@ def test_tiff_multipage_round_trip_random_pages(n_pages, big_endian, seed):
                     mixed, ">" if big_endian else "<", 4
                 )
             )
+
+
+#: (symbol, second offset, price, volume) — offsets unique across the whole
+#: list so open/close have no event_time ties (tie order is unspecified)
+_TICKS = st.lists(
+    st.tuples(
+        st.sampled_from(["AAA", "BBB"]),
+        st.integers(0, 30 * 60),
+        st.integers(100, 50_000).map(lambda c: c / 100),
+        st.none() | st.integers(0, 1000),
+    ),
+    min_size=1,
+    max_size=40,
+    unique_by=lambda r: r[1],
+)
+
+
+@settings(max_examples=8, deadline=None)
+@given(_TICKS, st.integers(1, 30))
+def test_bar_merge_map_agrees_with_tick_aggregates(spark, rows, minutes):
+    """``_BAR_MERGE`` over finer bars equals ``_BAR_AGGS`` over their ticks:
+    the pane-merged sliding bars equal a direct sliding-window aggregate,
+    and a bar summary equals one aggregate of the window's ticks."""
+    import datetime as dt
+
+    from pyspark.sql import functions as F
+
+    from stockpulse_batch_realtime_etl_spark.operators import serving
+    from stockpulse_batch_realtime_etl_spark.operators.ohlcv import (
+        BAR_COLUMNS,
+        bar_agg_exprs,
+        ohlcv_bars,
+        sliding_bars,
+    )
+
+    t0 = dt.datetime(2024, 1, 15, 12, 0)
+    ticks = [(s, p, v, t0 + dt.timedelta(seconds=o)) for s, o, p, v in rows]
+    schema = "symbol string, price double, volume long, event_time timestamp"
+    t = spark.createDataFrame(ticks, schema)
+
+    direct = (
+        t.groupBy(
+            "symbol",
+            F.expr("window(event_time, '5 minutes', '1 minute') AS w"),
+        )
+        .agg(*bar_agg_exprs())
+        .selectExpr(
+            "symbol", "w.start AS window_start", "w.end AS window_end", *BAR_COLUMNS
+        )
+    )
+    assert sorted(sliding_bars(t, 5, 1).collect()) == sorted(direct.collect())
+
+    def minute(x):
+        return x.replace(second=0, microsecond=0)
+
+    cutoff = max(minute(r[3]) for r in ticks) - dt.timedelta(minutes=minutes)
+    sym = ticks[0][0]
+    in_window = [r for r in ticks if r[0] == sym and minute(r[3]) >= cutoff]
+    expected = (
+        spark.createDataFrame(in_window, schema)
+        .groupBy("symbol")
+        .agg(*bar_agg_exprs())
+        .collect()
+    )
+    got = serving.bar_summary(ohlcv_bars(t), sym, minutes).select(
+        "symbol", *BAR_COLUMNS
+    )
+    assert got.collect() == expected

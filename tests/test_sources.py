@@ -116,3 +116,38 @@ def test_literal_df_is_one_partition(spark):
     df = literal_df(spark, [(1, "a"), (2, "b")], "id long, s string")
     assert df.rdd.getNumPartitions() == 1
     assert df.count() == 2
+
+
+def test_literal_df_builds_within_py4j_budget(spark, monkeypatch):
+    """A literal frame travels as one JSON string: building 30 rows × 4
+    columns takes a few dozen py4j round trips, not one Column per cell
+    (~4,900), and the values come back exactly, NaN, quotes and nulls too."""
+    import gc
+    import math
+
+    from py4j.clientserver import ClientServerConnection
+
+    from stockpulse_batch_realtime_etl_spark.sources.tables import literal_df
+
+    rows = [
+        (i, f'sym "{i}"\n', None if i % 7 == 0 else i * 0.1, i % 2 == 0)
+        for i in range(29)
+    ] + [(29, None, float("nan"), None)]
+    calls = []
+    send = ClientServerConnection.send_command
+
+    def counted(self, command):
+        calls.append(command)
+        return send(self, command)
+
+    # collect earlier tests' dead Java proxies now: each one freed inside
+    # the counted window would send its own release command
+    gc.collect()
+    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
+    df = literal_df(spark, rows, "id long, s string, x double, b boolean")
+    monkeypatch.undo()
+    assert 0 < len(calls) <= 50, len(calls)
+
+    out = [tuple(r) for r in df.orderBy("id").collect()]
+    assert out[:-1] == rows[:-1]
+    assert out[-1][:2] == (29, None) and math.isnan(out[-1][2]) and out[-1][3] is None

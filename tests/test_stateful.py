@@ -1,5 +1,5 @@
-"""applyInPandasWithState running-bar operator: state must carry across
-micro-batches and merge by event_time, not arrival order."""
+"""Running-bar operator: state must carry across micro-batches and merge by
+event_time, not arrival order."""
 
 from __future__ import annotations
 
@@ -94,107 +94,3 @@ def test_running_bars_state_carries_across_batches(spark, dirs):
     # MSFT appears with its own isolated state
     m = [s for s in seen if "MSFT" in s][-1]["MSFT"]
     assert m["open"] == m["close"] == 1.0 and m["tick_count"] == 1
-
-
-# --- transformWithState twin: direct-drive (no streaming runtime) -----------
-# The TWS Python runner needs google.protobuf (absent in this container), so
-# the processor's fold is verified by driving handleInputRows directly with a
-# stub ValueState — the same exact-under-any-batch-split property the gated
-# applyInPandasWithState twin proves end-to-end.
-
-class _StubValueState:
-    def __init__(self):
-        self._v = None
-
-    def exists(self):
-        return self._v is not None
-
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = v
-
-    def clear(self):
-        self._v = None
-
-
-class _StubHandle:
-    def __init__(self):
-        self.state = _StubValueState()
-
-    def getValueState(self, name, schema, ttlDurationMs=None):
-        return self.state
-
-
-def _drive(proc_cls, batches):
-    import pandas as pd
-
-    proc = proc_cls()
-    proc.init(_StubHandle())
-    out = None
-    for pdf in batches:
-        out = pd.concat(list(proc.handleInputRows(("AAPL",), iter([pdf]), None)))
-    proc.close()
-    return out.iloc[-1]
-
-
-def test_tws_fold_matches_batch_aggregate_under_any_split():
-    import pandas as pd
-
-    from stockpulse_batch_realtime_etl_spark.streaming.stateful import (
-        RunningBarProcessor,
-    )
-
-    rows = pd.DataFrame(
-        {
-            "event_time": pd.to_datetime(
-                ["2024-01-01 09:31", "2024-01-01 09:30", "2024-01-01 09:33",
-                 "2024-01-01 09:32", "2024-01-01 09:34"]
-            ),
-            "price": [10.0, 11.0, 9.5, 12.0, 10.5],
-            "volume": [100, None, 300, 200, 50],
-        }
-    )
-    # expected batch semantics: open/close by event_time, extrema, sums
-    expected = dict(
-        open=11.0, close=10.5, high=12.0, low=9.5, volume_sum=650,
-        tick_count=5,
-    )
-    # every contiguous 2-way split AND the all-at-once case must agree
-    splits = [[rows]] + [
-        [rows.iloc[:i].reset_index(drop=True), rows.iloc[i:].reset_index(drop=True)]
-        for i in range(1, len(rows))
-    ]
-    for batches in splits:
-        last = _drive(RunningBarProcessor, batches)
-        for k, v in expected.items():
-            assert last[k] == v, (k, batches)
-
-
-def test_tws_and_apply_folds_share_semantics():
-    # the two exemplars' fold bodies must agree on the same input
-    import pandas as pd
-
-    from stockpulse_batch_realtime_etl_spark.streaming import stateful
-
-    pdf = pd.DataFrame(
-        {
-            "event_time": pd.to_datetime(["2024-01-01 09:30", "2024-01-01 09:31"]),
-            "price": [10.0, 20.0],
-            "volume": [1, 2],
-        }
-    )
-    tws = _drive(stateful.RunningBarProcessor, [pdf])
-
-    class _GS:  # minimal GroupState stub for the applyInPandasWithState fold
-        exists = False
-        get = None
-
-        def update(self, v):
-            self.stored = v
-
-    rows = list(stateful._fold(("AAPL",), iter([pdf]), _GS()))
-    apply_row = rows[0].iloc[0]
-    for k in ("open", "high", "low", "close", "volume_sum", "tick_count"):
-        assert apply_row[k] == tws[k], k

@@ -68,7 +68,8 @@ SORT_AGG_KEEPS: dict[str, tuple[int, str]] = {
     ),
     "streaming_running_bars": (
         4,
-        "max_by(struct) over the EMITTED bars table — symbols x "
+        "max_by(struct) picking the final row per symbol from the "
+        "update-mode running bars read back from the sink — symbols x "
         "micro-batches rows, bounded small",
     ),
 }
