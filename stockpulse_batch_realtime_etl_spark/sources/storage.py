@@ -11,20 +11,25 @@ symbol" an index-only backward scan.  The columnar equivalent:
   time predicate prunes dates;
 * **bars: partition by date**, one file per day — the streaming upsert
   rewrites whole days, and a symbol level would split each into a file
-  per symbol.  Batch build and upsert share ONE writer, :func:`_write_bars`;
+  per symbol.  This module is the only code that knows the bars format:
+  ONE writer, :func:`_write_bars`, for the batch build and the upsert, and
+  ONE reader, :func:`read_bars`, with the declared ``BARS_TABLE_SCHEMA``
+  (the reference's ``stock_bars_1m`` DDL, init.sql:13-25), so no read
+  infers it;
 * **sort within files** by time (bars: symbol, then time) — parquet
   min/max row-group statistics skip the rest (the DESC-scan analog);
 * top-k over the pruned scan is ``TakeOrderedAndProject`` — no full sort.
 
 ``tests/test_storage.py`` asserts the pruning actually happens (the plan's
-PartitionFilters, not just intent) and that both bars writers agree.
+PartitionFilters, not just intent), that both bars writers agree and that
+the reader returns the schema a parquet read infers.
 """
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DateType, StructField, StructType
 
 from stockpulse_batch_realtime_etl_spark.schemas import STOCK_BARS_SCHEMA, typed_columns
 
@@ -45,6 +50,11 @@ def write_ticks_partitioned(ticks: DataFrame, path: str) -> None:
 
 #: The bars table's key: the reference's unique (symbol, bucket_start).
 BARS_KEY = ("symbol", "bucket_start")
+
+#: The bars table as stored: ``STOCK_BARS_SCHEMA`` plus the day partition.
+BARS_TABLE_SCHEMA = StructType(
+    [*STOCK_BARS_SCHEMA.fields, StructField("bucket_date", DateType())]
+)
 
 
 def _write_bars(bars: DataFrame, path: str, dynamic: bool) -> int:
@@ -75,6 +85,13 @@ def write_bars_partitioned(bars: DataFrame, path: str) -> None:
     _write_bars(bars, path, dynamic=False)
 
 
+def read_bars(spark: SparkSession, path: str) -> DataFrame:
+    """Read the bars table at ``path`` with its declared schema: the
+    columns and types a parquet read infers, without the footer-reading
+    job that infers them.  A table with no data files yet reads empty."""
+    return spark.read.schema(BARS_TABLE_SCHEMA).parquet(path)
+
+
 def upsert_bars(batch: DataFrame, path: str) -> int:
     """Upsert ``batch`` into the bars table keyed on ``BARS_KEY`` (the
     reference's ON CONFLICT DO UPDATE, aggregator.py:41-51), rewriting only
@@ -85,20 +102,16 @@ def upsert_bars(batch: DataFrame, path: str) -> int:
     spark = batch.sparkSession
     hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
     fs = hpath.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
-    # a missing table costs one Hadoop ``exists``; a read that raises costs
-    # hundreds of py4j round trips.  try-scope is EXACTLY the table read: a
-    # wider scope would take any later analysis error as a first write
-    try:
-        table = spark.read.parquet(path) if fs.exists(hpath) else None
-    except AnalysisException:  # a directory with no data files yet
-        table = None
-    if table is None:
+    # a missing table cannot be read: its first write is the batch alone
+    if not fs.exists(hpath):
         return _write_bars(batch, path, dynamic=True)
     batch.persist()
     try:
         per_day = batch.groupBy(F.to_date("bucket_start").alias("d")).count().collect()
         if per_day:
-            days = table.filter(F.col("bucket_date").isin([r["d"] for r in per_day]))
+            days = read_bars(spark, path).filter(
+                F.col("bucket_date").isin([r["d"] for r in per_day])
+            )
             keep = days.join(batch.select(*BARS_KEY), list(BARS_KEY), "left_anti")
             _write_bars(keep.drop("bucket_date").unionByName(batch), path, True)
         return sum(r["count"] for r in per_day)
@@ -110,44 +123,3 @@ def read_ticks(spark: SparkSession, path: str) -> DataFrame:
     """Read the partitioned ticks table; symbol/event_date predicates become
     partition pruning, event_time predicates become row-group skipping."""
     return spark.read.parquet(path)
-
-
-def write_bucketed(df: DataFrame, table_name: str, path: str) -> None:
-    """Write ``df`` as a bucketed external table: hash-bucketed into 8
-    buckets AND sorted by ``symbol`` within each bucket file.
-
-    Bucketing is the co-located-join layout: two tables bucketed by the
-    same key into the same bucket count join WITHOUT any Exchange — each
-    task reads bucket i of both sides.  At 100 TB this removes the shuffle
-    of BOTH join inputs for every recurring join on the key (ticks⋈bars,
-    ticks⋈dim); the shuffle is paid once at write time instead of once per
-    query.  ``tests/test_storage.py`` asserts the exchange-free plan.
-    """
-    (
-        df.write.mode("overwrite")
-        .format("parquet")
-        .option("path", path)
-        .bucketBy(8, "symbol")
-        .sortBy("symbol")
-        .saveAsTable(table_name)
-    )
-
-
-def compact_partitioned(
-    spark: SparkSession, src: str, dst: str, partition_col: str
-) -> None:
-    """Small-file compaction: rewrite the partitioned table at ``src`` into
-    the fresh path ``dst`` with one right-sized file set per partition (one
-    shuffle on the partition key, at most 5M records per file), for tables
-    that appending writers (a file sink, per-trigger appends) fill with
-    small files.  The bars writer already writes one file per day.  The
-    caller swaps ``dst`` in; the table being read is never overwritten.
-    """
-    df = spark.read.parquet(src)
-    (
-        df.repartition(F.col(partition_col))
-        .write.mode("overwrite")
-        .option("maxRecordsPerFile", 5_000_000)
-        .partitionBy(partition_col)
-        .parquet(dst)
-    )

@@ -23,10 +23,12 @@ ST7    at-least-once consumer → checkpointed source offsets + idempotent
 
 Sink design without Delta: the bars table format is ``sources/storage``'s,
 shared with the batch build: Parquet partitioned by ``bucket_date``, one
-file per day.  Each micro-batch rewrites ONLY the days it touches (dynamic
-partition overwrite), keeping their other keys' rows via an anti-join.  A
-day is ~1440 × n_symbols bars, so the rewrite amplification is bounded.
-(With Delta/Iceberg this collapses to ``MERGE INTO``.)
+file per day, read back only through ``storage.read_bars`` with its
+declared schema, never inferred.  Each micro-batch rewrites ONLY the days
+it touches (dynamic partition overwrite), keeping their other keys' rows
+via an anti-join.  A day is ~1440 × n_symbols bars, so the rewrite
+amplification is bounded.  (With Delta/Iceberg this collapses to
+``MERGE INTO``.)
 
 Bounded runs: every ``run_*`` function below is one stream definition
 handed to :func:`_run_bounded`, which wipes its directories, builds the
@@ -514,7 +516,7 @@ def run_pipeline_available_now(
         mode="update",
         write=upsert_bars_batch,
     )
-    return spark.read.parquet(out_dir).drop("bucket_date")
+    return storage.read_bars(spark, out_dir).drop("bucket_date")
 
 
 def start_dlq_sink(

@@ -61,66 +61,6 @@ def test_latest_ticks_over_partitioned_layout(spark, ticks_path):
     assert times == sorted(times, reverse=True)
 
 
-def test_bucketed_join_has_no_exchange(spark, tmp_path_factory):
-    """Two tables bucketed by symbol into the same bucket count must join
-    with ZERO shuffles (the bucket layout IS the join partitioning), and
-    produce the same rows as the shuffled join."""
-    from stockpulse_batch_realtime_etl_spark.operators.ohlcv import ohlcv_bars
-    from stockpulse_batch_realtime_etl_spark.plans.assertions import simple_plan
-    from stockpulse_batch_realtime_etl_spark.sources.storage import write_bucketed
-    from stockpulse_batch_realtime_etl_spark.sources.ticks import ticks_from_events
-
-    base = tmp_path_factory.mktemp("bucketed")
-    ticks = ticks_from_events(spark, "/root/testdata/sf0.001")
-    sym_stats = ticks.groupBy("symbol").count()
-    bars = ohlcv_bars(ticks)
-    write_bucketed(sym_stats, "t_sym_stats", str(base / "sym_stats"))
-    write_bucketed(bars, "t_bars_b", str(base / "bars"))
-
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = spark.table("t_bars_b").join(
-            spark.table("t_sym_stats"), "symbol"
-        )
-        plan = simple_plan(joined)
-        assert "Exchange" not in plan, plan
-        assert "SortMergeJoin" in plan
-        expected = bars.join(sym_stats, "symbol")
-        assert sorted(map(tuple, joined.collect())) == sorted(
-            map(tuple, expected.collect())
-        )
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS t_sym_stats")
-        spark.sql("DROP TABLE IF EXISTS t_bars_b")
-
-
-def test_compaction_reduces_files_preserves_rows(spark, tmp_path_factory):
-    import glob
-
-    from stockpulse_batch_realtime_etl_spark.sources.storage import (
-        compact_partitioned,
-    )
-    from stockpulse_batch_realtime_etl_spark.sources.ticks import ticks_from_events
-
-    base = tmp_path_factory.mktemp("compact")
-    src, dst = str(base / "src"), str(base / "dst")
-    ticks = ticks_from_events(spark, "/root/testdata/sf0.001").withColumn(
-        "event_date", F.to_date("event_time")
-    )
-    # simulate a streaming sink's file spray: 20 files per partition
-    ticks.repartition(20).write.partitionBy("event_date").parquet(src)
-    n_src_files = len(glob.glob(f"{src}/event_date=*/part-*"))
-    compact_partitioned(spark, src, dst, "event_date")
-    n_dst_files = len(glob.glob(f"{dst}/event_date=*/part-*"))
-    n_parts = len(glob.glob(f"{dst}/event_date=*"))
-    assert n_dst_files == n_parts < n_src_files  # one file per partition here
-    assert (
-        spark.read.parquet(dst).count() == spark.read.parquet(src).count() > 0
-    )
-
-
 def _table_format(spark, path):
     """(parquet files per directory under ``path``, table schema)."""
     import os
@@ -170,3 +110,27 @@ def test_batch_build_and_streaming_upsert_write_one_bars_format(spark, tmp_path)
     assert built_df.count() == 3
     assert built_df.exceptAll(upserted_df).count() == 0
     assert upserted_df.exceptAll(built_df).count() == 0
+
+
+def test_read_bars_declares_the_inferred_schema(spark, tmp_path):
+    """``read_bars`` returns exactly the schema a parquet read infers, for
+    a table the batch build writes and one the upsert writes, and reads a
+    table with no data files yet as empty."""
+    from stockpulse_batch_realtime_etl_spark.streaming import job
+
+    bars = spark.createDataFrame(
+        [("AAPL", "2024-01-15 12:05:00", 1.0, 2.0, 0.5, 1.5, 10, 2)],
+        "symbol string, bucket_start string, open double, high double, "
+        "low double, close double, volume_sum long, tick_count int",
+    ).withColumn("bucket_start", F.to_timestamp("bucket_start"))
+    built, upserted = str(tmp_path / "built"), str(tmp_path / "upserted")
+    storage.write_bars_partitioned(bars, built)
+    job.upsert_bars_batch(bars, upserted)
+    for path in (built, upserted):
+        read = storage.read_bars(spark, path)
+        assert read.schema == spark.read.parquet(path).schema
+        assert read.exceptAll(spark.read.parquet(path)).count() == 0
+    empty = tmp_path / "empty" / "bucket_date=2024-01-20"
+    empty.mkdir(parents=True)
+    (empty / "_marker").write_text("no data")
+    assert storage.read_bars(spark, str(tmp_path / "empty")).count() == 0

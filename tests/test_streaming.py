@@ -236,6 +236,24 @@ def test_first_upsert_is_one_write(spark, tmp_path):
     assert spark.read.parquet(table).count() == 3
 
 
+def test_upsert_into_existing_table_infers_no_schema(spark, tmp_path):
+    """An upsert into an existing table reads it with the declared bars
+    schema: at most 6 Spark jobs (three for the batch's day collect, three
+    for the day-shuffled write), none of them the footer read that
+    inferring the schema costs, counted through their job group."""
+    table = str(tmp_path / "bars")
+    job.upsert_bars_batch(_bars(spark, TWO_DAYS), table)
+    batch = _bars(spark, [("AAPL", "2024-01-15 12:05", 9.0)])
+    sc = spark.sparkContext
+    sc.setJobGroup("existing-upsert", "upsert into an existing table")
+    try:
+        job.upsert_bars_batch(batch, table)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("existing-upsert")) <= 6
+    assert spark.read.parquet(table).count() == 3
+
+
 def test_upsert_computes_its_batch_once(spark, tmp_path):
     """A micro-batch is a stateful aggregation's output, so the upsert must
     compute it once: the first write reads it once, a later write persists
@@ -306,9 +324,9 @@ def test_upsert_rewrites_only_touched_days(spark, tmp_path):
 
 
 def test_first_upsert_keeps_days_it_does_not_touch(spark, tmp_path):
-    """A batch taken as a first write (the table read raised) still
-    replaces only its own days: here the table holds a day with no data
-    files yet, whose directory must survive."""
+    """A batch into a table that reads empty still replaces only its own
+    days: here the table holds a day with no data files yet, whose
+    directory must survive."""
     table = tmp_path / "bars"
     other = table / "bucket_date=2024-01-20"
     other.mkdir(parents=True)
@@ -401,6 +419,8 @@ def test_stream_build_stays_within_py4j_budget(spark, tmp_path, monkeypatch):
     foreachBatch writer) is a fixed cost of every replay.  Built from SQL
     text it takes ~125 py4j round trips; built from Columns, which record
     their call site on every call, the split alone took ~1,000."""
+    import gc
+
     from py4j.clientserver import ClientServerConnection
 
     calls = []
@@ -411,6 +431,9 @@ def test_stream_build_stays_within_py4j_budget(spark, tmp_path, monkeypatch):
         return send(self, command)
 
     (tmp_path / "src").mkdir()
+    # collect earlier tests' dead Java proxies now: each one freed inside
+    # the counted window would send its own release command
+    gc.collect()
     monkeypatch.setattr(ClientServerConnection, "send_command", counted)
     ticks, _ = job.tick_stream_from_raw(
         job.raw_json_stream(spark, str(tmp_path / "src")))
