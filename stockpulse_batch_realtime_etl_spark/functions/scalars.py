@@ -35,12 +35,12 @@ SYMBOL_RE = "^[A-Za-z]{1,10}$"
 def ts_micros(ts: Column | str) -> Column:
     """Epoch microseconds of a timestamp column, tolerant of TIMESTAMP_NTZ.
 
-    Spark 4.1 ignores ``spark.sql.legacy.parquet.nanosAsLong`` and reads
-    parquet TIMESTAMP(NANOS) as TIMESTAMP_NTZ (µs-truncated), which
-    ``unix_micros`` rejects outright — so cast first.  Precondition: the
-    session timezone is UTC (asserted loudly in sources/tables.py), which
-    makes the NTZ→timestamp cast instant-preserving; on a plain
-    TimestampType column the cast is a no-op.
+    ``events.ts`` stored as TIMESTAMP(MICROS) without UTC adjustment reads
+    as TIMESTAMP_NTZ, which ``unix_micros`` rejects outright — so cast
+    first.  Precondition: the session timezone is UTC (asserted loudly in
+    sources/tables.py), which makes the NTZ→timestamp cast
+    instant-preserving; on a plain TimestampType column the cast is a
+    no-op.
     """
     c = F.col(ts) if isinstance(ts, str) else ts
     return F.unix_micros(c.cast("timestamp"))

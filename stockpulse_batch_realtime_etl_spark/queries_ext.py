@@ -3114,7 +3114,8 @@ FROM daily
 )
 def q_streaming_metrics_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """p50/p95/p99 over per-micro-batch input rows from a real bounded
-    streaming run, captured by the ProgressMetricsListener."""
+    streaming run, read from the finished query's ``recentProgress``
+    (:func:`streaming.job.run_metrics_probe`)."""
     from stockpulse_batch_realtime_etl_spark.streaming import metrics
     from stockpulse_batch_realtime_etl_spark.streaming.job import (
         run_metrics_probe,

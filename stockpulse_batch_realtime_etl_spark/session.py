@@ -65,9 +65,10 @@ def default_conf(shuffle_partitions: int | None = None) -> dict[str, str]:
         "spark.sql.adaptive.skewJoin.enabled": "true",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.sql.parquet.filterPushdown": "true",
-        # The driver's events.parquet carries TIMESTAMP(NANOS) which Spark
-        # rejects by default; read as long nanos and convert explicitly
-        # (sources/tables.py) — truncation to µs matches DuckDB's read.
+        # An events.parquet carrying TIMESTAMP(NANOS) is rejected by default;
+        # this reads it as long nanos, which sources/tables.load_table
+        # truncates to µs as DuckDB does.  TIMESTAMP(MICROS) files, like the
+        # sf fixtures, read as timestamp_ntz whatever this says.
         "spark.sql.legacy.parquet.nanosAsLong": "true",
         # Streaming state: every stateful operator here is bounded by a
         # watermark (or by the bounded corpus), so the in-memory, checkpointed

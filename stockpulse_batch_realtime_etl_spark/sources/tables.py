@@ -26,8 +26,8 @@ def _ensure_session_confs(spark: SparkSession) -> None:
     a bare ``SparkSession.builder.getOrCreate()`` session (e.g. an external
     harness).  Without them:
 
-    * ``spark.sql.legacy.parquet.nanosAsLong`` — ``events.parquet`` stores
-      ``ts`` as TIMESTAMP(NANOS), which Spark rejects at the scan with
+    * ``spark.sql.legacy.parquet.nanosAsLong`` — an ``events.parquet`` that
+      stores ``ts`` as TIMESTAMP(NANOS) is rejected at the scan with
       PARQUET_TYPE_ILLEGAL unless read as long nanos.
     * ``spark.sql.session.timeZone=UTC`` — date_trunc/to_date/collected
       timestamps must match the UTC-normalized DuckDB oracle regardless of
@@ -58,10 +58,13 @@ def _ensure_session_confs(spark: SparkSession) -> None:
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one driver table (``{sf_dir}/{name}.parquet``).
 
-    ``events.ts`` is stored as TIMESTAMP(NANOS), which Spark reads as long
-    nanos under ``spark.sql.legacy.parquet.nanosAsLong``; convert to a real
-    µs timestamp here (integer ``div 1000`` — truncation, matching DuckDB's
-    parquet read of the same column) so every consumer sees TimestampType.
+    ``events.ts`` stored as TIMESTAMP(MICROS) without UTC adjustment (the
+    sf fixtures) reads as ``timestamp_ntz``, taken as is; consumers that
+    need an instant cast it (``functions.scalars.ts_micros``).  Stored as
+    TIMESTAMP(NANOS), Spark reads it as long nanos under
+    ``spark.sql.legacy.parquet.nanosAsLong``; convert that to a real µs
+    timestamp here (integer ``div 1000`` — truncation, matching DuckDB's
+    parquet read of the same column).
     """
     _ensure_session_confs(spark)
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))

@@ -31,12 +31,13 @@ amplification is bounded.  (With Delta/Iceberg this collapses to
 ``MERGE INTO``.)
 
 Bounded runs: every ``run_*`` function below is one stream definition
-handed to :func:`_run_bounded`, which wipes its directories, builds the
-corpus, runs it once with ``availableNow`` into a ``foreachBatch`` writer
-and restores the session conf.  All streaming state — windows, dedup keys,
-join buffers, the running bar — is watermark- or corpus-bounded, so
-it lives in the one state-store provider ``session.default_conf`` sets:
-the in-memory, checkpointed HDFS-backed store.
+handed to :func:`_run_bounded`, which wipes its directories, builds the one
+day-partitioned corpus, runs it once with ``availableNow`` into a
+``foreachBatch`` writer and restores the session conf.  All streaming
+state — windows, dedup keys, join buffers, the running bar — is watermark-
+or corpus-bounded, so it lives in the one state-store provider
+``session.default_conf`` sets: the in-memory, checkpointed HDFS-backed
+store.
 
 A replay's fixed cost, not its rows, dominates: a bounded bars replay is
 one micro-batch of three stages (decode + partial aggregate, stateful
@@ -45,6 +46,12 @@ aggregate, day-shuffled write).  Its split, bars query and sink take
 ~4 to record its call site: ~1,900 as Columns).  Checkpoints fork no
 ``readlink`` (``session.default_conf``); 86 ``chmod`` forks remain, one per
 file or directory created without libhadoop.  Planning takes the rest.
+
+Stopping a query while its ``foreachBatch`` body runs a Spark job can kill
+the stream execution thread with a ``StackOverflowError`` and leave
+``exception()`` ``None``: Spark 4.1's ``StreamExecution.PROXY_ERROR`` regex,
+which tests whether the body's Py4J error came from the stop, recurses once
+per character of that error's message.
 """
 
 from __future__ import annotations
@@ -209,48 +216,52 @@ def _start(
 
 #: Bump when RAW_JSON_SQL / corpus derivation changes — it keys the on-disk
 #: corpus cache, so stale corpora from older code can never be reused.
-_CORPUS_VERSION = "v2"
+_CORPUS_VERSION = "v3"
 
 
-def _ensure_corpus(
-    spark: SparkSession, sf_dir: str, with_redelivery: bool
-) -> str:
-    """Materialize the Kafka-shaped JSON corpus for ``sf_dir`` ONCE and
-    reuse it across queries and processes.
+def _ensure_corpus(spark: SparkSession, sf_dir: str) -> str:
+    """Materialize the Kafka-shaped JSON corpus of ``sf_dir`` ONCE, one text
+    file per event day, and reuse it across runs and processes.
 
-    The corpus is a pure function of (sf_dir, corpus version), so both
-    bounded streaming queries — and re-runs of either — can share one
-    write.  Reuse is gated on Spark's ``_SUCCESS`` marker (a partial write
-    from a killed run never has one).  The redelivered 20% slice (op ST7)
-    lives in a sibling dir; the dedup run reads ``{base,extra}`` via
-    Hadoop glob so no files are ever copied or appended.
+    The corpus is a pure function of (fixture fingerprint, corpus version):
+    :func:`_publish_atomic` publishes it, and reuse is gated on Spark's
+    ``_SUCCESS`` marker (a killed run's partial write never has one).
+    Strictly increasing per-day mtimes (:func:`_pin_daily_mtimes`, re-applied
+    per call) pin the file source's discovery order to event-time order, so
+    a run with ``maxFilesPerTrigger=k`` replays history as day-granular
+    micro-batches with ADVANCING watermarks, and stateful operators
+    garbage-collect mid-run as in production.  One availableNow mega-batch
+    never moves the watermark: stream-stream join state then holds BOTH
+    ENTIRE SIDES (a probe measured the interval join at 38× wall for 10×
+    data that way; day-batched it is linear).
     """
     import tempfile
 
+    from stockpulse_batch_realtime_etl_spark.sources.tables import load_table
     from stockpulse_batch_realtime_etl_spark.sources.ticks import raw_json_corpus
 
-    tag = _corpus_tag(sf_dir)
-    root = os.path.join(tempfile.gettempdir(), f"stockpulse_corpus_{tag}")
-    base = os.path.join(root, "base")
-    if not os.path.exists(os.path.join(base, "_SUCCESS")):
-        _publish_atomic(
-            base, lambda d: raw_json_corpus(spark, sf_dir)
-            .select("value")
-            .write.mode("overwrite")
-            .text(d),
-        )
-    if not with_redelivery:
-        return base
-    extra = os.path.join(root, "extra")
-    if not os.path.exists(os.path.join(extra, "_SUCCESS")):
-        _publish_atomic(
-            extra, lambda d: raw_json_corpus(spark, sf_dir)
-            .filter(F.col("offset") % 5 == 0)
-            .select("value")
-            .write.mode("overwrite")
-            .text(d),
-        )
-    return os.path.join(root, "{base,extra}")
+    dest = os.path.join(
+        tempfile.gettempdir(), f"stockpulse_corpus_{_corpus_tag(sf_dir)}"
+    )
+    if not os.path.exists(os.path.join(dest, "_SUCCESS")):
+        def _write(d: str) -> None:
+            ev = load_table(spark, sf_dir, "events").select(
+                F.col("event_id").alias("offset"),
+                F.to_date("ts").alias("day"),
+            )
+            (
+                raw_json_corpus(spark, sf_dir)
+                .join(ev, "offset")
+                .repartition("day")
+                .select("value", "day")
+                .write.partitionBy("day")
+                .mode("overwrite")
+                .text(d)
+            )
+
+        _publish_atomic(dest, _write)
+    _pin_daily_mtimes(dest)
+    return dest
 
 
 def _fixture_fingerprint(sf_dir: str) -> str:
@@ -268,14 +279,13 @@ def _fixture_fingerprint(sf_dir: str) -> str:
         return f"{real}:events:missing"
 
 
-def _corpus_tag(sf_dir: str, extra_key: str = "") -> str:
-    """Cache key for materialized streaming corpora: builder code version
+def _corpus_tag(sf_dir: str) -> str:
+    """Cache key of the materialized streaming corpus: builder code version
     + the shared fixture fingerprint."""
     import hashlib
 
     return hashlib.md5(
-        f"{_CORPUS_VERSION}:{extra_key}:"
-        f"{_fixture_fingerprint(sf_dir)}".encode()
+        f"{_CORPUS_VERSION}:{_fixture_fingerprint(sf_dir)}".encode()
     ).hexdigest()[:8]
 
 
@@ -334,60 +344,10 @@ def _publish_atomic(dest: str, write_fn) -> None:
             shutil.rmtree(tomb, ignore_errors=True)
 
 
-def _ensure_daily_corpus(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the Kafka-shaped JSON corpus ONE TEXT FILE PER EVENT DAY
-    (repartition("day") + partitionBy("day")) and pin file-discovery order
-    to event-time order with strictly increasing per-day mtimes (the file
-    stream source orders by modification time) — so a bounded run reading
-    it with ``maxFilesPerTrigger=k`` replays history as day-granular
-    micro-batches with ADVANCING watermarks.  That is what lets stateful
-    operators garbage-collect mid-run exactly as in production: a single
-    availableNow mega-batch never moves the watermark, so stream-stream
-    join state holds BOTH ENTIRE SIDES and every probe scans its whole
-    key bucket (the round-8 probe measured the interval join at 38× wall
-    for 10× data that way; day-batched it is linear).  Shared by the
-    metrics probe (which needs batches ≡ days for its oracle) and the
-    interval join (which needs the watermark to advance).  Built once per
-    (fixture fingerprint) via the same _publish_atomic scheme as
-    _ensure_corpus; the mtime pinning is idempotent and re-applied per
-    call (rename preserves mtimes, but a publisher race loser's clock
-    must not leak in)."""
-    import tempfile
-
-    from stockpulse_batch_realtime_etl_spark.sources.tables import load_table
-    from stockpulse_batch_realtime_etl_spark.sources.ticks import (
-        raw_json_corpus,
-    )
-
-    tag = _corpus_tag(sf_dir, extra_key="daily")
-    dest = os.path.join(
-        tempfile.gettempdir(), f"stockpulse_corpus_daily_{tag}"
-    )
-    if not os.path.exists(os.path.join(dest, "_SUCCESS")):
-        def _write(d: str) -> None:
-            ev = load_table(spark, sf_dir, "events").select(
-                F.col("event_id").alias("offset"),
-                F.to_date("ts").alias("day"),
-            )
-            (
-                raw_json_corpus(spark, sf_dir)
-                .join(ev, "offset")
-                .repartition("day")
-                .select("value", "day")
-                .write.partitionBy("day")
-                .mode("overwrite")
-                .text(d)
-            )
-
-        _publish_atomic(dest, _write)
-    _pin_daily_mtimes(dest)
-    return dest
-
-
 def _pin_daily_mtimes(dest: str) -> None:
-    """Pin strictly increasing per-day mtimes over a published daily
-    corpus (file-stream sources discover by modification time — see
-    :func:`_ensure_daily_corpus`).  Idempotent, and safe against a
+    """Pin strictly increasing per-day mtimes over a published corpus
+    (file-stream sources discover by modification time — see
+    :func:`_ensure_corpus`).  Idempotent, and safe against a
     CONCURRENT publisher's tombstone swap: _publish_atomic renames a
     stale dest ASIDE for a moment before the fresh copy lands, so
     listdir/utime here can see dest (or a file swept away with the
@@ -431,7 +391,6 @@ def _run_bounded(
     query: Callable[[DataFrame], DataFrame],
     mode: str = "append",
     write: Callable[[DataFrame, str], None] | None = None,
-    redelivery: bool = False,
     days_per_batch: int | None = None,
     flush: bool = False,
 ) -> tuple[str, StreamingQuery]:
@@ -442,10 +401,10 @@ def _run_bounded(
       dir keyed on ``kind`` and ``sf_dir``) are wiped first, so every run
       starts from empty state and replays idempotently.
     * Corpus: ``query`` maps the raw ``value`` stream to the output stream.
-      The corpus is built once and cached (:func:`_ensure_corpus`), with the
-      redelivered slice when ``redelivery``.  With ``days_per_batch`` it is
-      the day-partitioned corpus (:func:`_ensure_daily_corpus`), replayed
-      that many days per micro-batch so the watermark advances mid-run.
+      The day-partitioned corpus is built once and cached
+      (:func:`_ensure_corpus`).  With ``days_per_batch`` it is replayed that
+      many days per micro-batch so the watermark advances mid-run; without,
+      it is one micro-batch.
     * Trailing no-data batch: off unless ``flush`` (see :func:`_start`).
     * State partitions: 8, whatever the session's shuffle.partitions, so
       bounded state is not spread over a cluster-sized task count.  The
@@ -476,10 +435,7 @@ def _run_bounded(
             batch.write.mode(save_mode).parquet(path)
 
     with _session_confs(spark, {"spark.sql.shuffle.partitions": _STATE_PARTITIONS}):
-        if days_per_batch:
-            corpus = _ensure_daily_corpus(spark, sf_dir)
-        else:
-            corpus = _ensure_corpus(spark, sf_dir, redelivery)
+        corpus = _ensure_corpus(spark, sf_dir)
         raw = raw_json_stream(spark, corpus, days_per_batch).select("value")
         writer = (
             query(raw)
@@ -608,6 +564,14 @@ def run_running_bars_available_now(
     return final.select("symbol", "s.*")
 
 
+def redelivered(raw: DataFrame) -> DataFrame:
+    """``raw`` with the records whose ``value`` hashes to 0 mod 5 (about a
+    fifth, the same ones on every replay) delivered a second time: what an
+    at-least-once consumer re-reads after a crash.  The slice is a filter of
+    the same source, so a stream reads that source twice."""
+    return raw.unionByName(raw.filter("pmod(xxhash64(value), 5) = 0"))
+
+
 def run_dedup_available_now(
     spark: SparkSession, sf_dir: str, base_dir: str | None = None
 ) -> DataFrame:
@@ -616,13 +580,13 @@ def run_dedup_available_now(
     (consumer.py:111-117 — auto-commit + non-transactional insert, no dedup
     key); ``dropDuplicates`` over a watermarked stream is the Spark fix.
 
-    Bounded, oracle-checkable form: stream the JSON corpus PLUS a
-    deterministically re-delivered 20% slice (every 5th offset — simulating
-    redelivery after a crash), decode, and keep first-seen (symbol,
-    event_time) keys.  The output must equal plain DISTINCT over the clean
-    corpus — if the operator failed to collapse the redelivered rows the
-    row count (and hash) would differ, so the gate actually proves the
-    dedup.  State is one key per distinct (symbol, event_time) bounded by
+    Bounded, oracle-checkable form: stream the JSON corpus with a
+    deterministic fifth of it delivered twice (:func:`redelivered` —
+    simulating redelivery after a crash), decode, and keep first-seen
+    (symbol, event_time) keys.  The output must equal plain DISTINCT over
+    the clean corpus — if the operator failed to collapse the redelivered
+    rows the row count (and hash) would differ, so the gate actually proves
+    the dedup.  State is one key per distinct (symbol, event_time) bounded by
     the watermark — at production rates, minutes of keys, not the stream's
     history.
     """
@@ -631,11 +595,10 @@ def run_dedup_available_now(
         sf_dir,
         base_dir,
         "dedup",
-        lambda raw: tick_stream_from_raw(raw)[0]
+        lambda raw: tick_stream_from_raw(redelivered(raw))[0]
         .select("symbol", "event_time")
         .withWatermark("event_time", "2 minutes")
         .dropDuplicates(["symbol", "event_time"]),
-        redelivery=True,
     )
     return spark.read.parquet(out_dir)
 
@@ -915,10 +878,9 @@ def run_stream_stream_interval_join_available_now(
     bounded availableNow run appends the complete pair set — equal to the
     batch interval join the oracle runs, independent of batch boundaries.
 
-    Batching: the corpus replays from the DAY-PARTITIONED corpus
-    (``_ensure_daily_corpus``) in event-time order, 30 day-files per
-    micro-batch, so the watermark ADVANCES between batches and join state
-    is garbage-collected mid-run.  A single availableNow mega-batch never
+    Batching: the day-partitioned corpus (``_ensure_corpus``) replays in
+    event-time order, 30 day-files per micro-batch, so the watermark
+    ADVANCES between batches and join state is garbage-collected mid-run.  A single availableNow mega-batch never
     moves the watermark — both entire sides sit in the state store and
     every probe scans its whole key bucket, which a scaling probe measured
     at 38× wall for 10× data (quadratic per key); chunked replay is linear

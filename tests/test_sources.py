@@ -124,6 +124,7 @@ def test_literal_df_builds_within_py4j_budget(spark, monkeypatch):
     (~4,900), and the values come back exactly, NaN, quotes and nulls too."""
     import gc
     import math
+    import threading
 
     from py4j.clientserver import ClientServerConnection
 
@@ -135,9 +136,13 @@ def test_literal_df_builds_within_py4j_budget(spark, monkeypatch):
     ] + [(29, None, float("nan"), None)]
     calls = []
     send = ClientServerConnection.send_command
+    # count only this thread's commands: a background thread sends the
+    # releases of dead proxies that earlier tests left, whenever it runs
+    owner = threading.get_ident()
 
     def counted(self, command):
-        calls.append(command)
+        if threading.get_ident() == owner:
+            calls.append(command)
         return send(self, command)
 
     # collect earlier tests' dead Java proxies now: each one freed inside

@@ -375,6 +375,18 @@ def test_streaming_dedup_collapses_redelivered_rows(spark):
     assert total == distinct > 0
 
 
+def test_redelivered_slice_repeats_valid_ticks(spark):
+    """The redelivered slice holds valid ticks, so the dedup run's input has
+    more (symbol, event_time) rows than distinct keys for it to collapse."""
+    from stockpulse_batch_realtime_etl_spark.sources.ticks import raw_json_corpus
+
+    raw = raw_json_corpus(spark, "/root/testdata/sf0.001").select("value")
+    keys = split_raw_stream(job.redelivered(raw)).ticks.select("symbol", "event_time")
+    clean = split_raw_stream(raw).ticks.select("symbol", "event_time")
+    assert keys.count() > clean.count()
+    assert keys.count() > keys.distinct().count() == clean.distinct().count()
+
+
 def _corpus_build_fails(*_args, **_kwargs):
     raise RuntimeError("corpus build failed")
 
@@ -420,14 +432,19 @@ def test_stream_build_stays_within_py4j_budget(spark, tmp_path, monkeypatch):
     text it takes ~125 py4j round trips; built from Columns, which record
     their call site on every call, the split alone took ~1,000."""
     import gc
+    import threading
 
     from py4j.clientserver import ClientServerConnection
 
     calls = []
     send = ClientServerConnection.send_command
+    # count only this thread's commands: a background thread sends the
+    # releases of dead proxies that earlier tests left, whenever it runs
+    owner = threading.get_ident()
 
     def counted(self, command):
-        calls.append(command)
+        if threading.get_ident() == owner:
+            calls.append(command)
         return send(self, command)
 
     (tmp_path / "src").mkdir()
